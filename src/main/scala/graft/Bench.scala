@@ -1,519 +1,105 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
+import graft.harness.{Harness, StreamingBench, Work}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line for the driver.
+  * prints ONE JSON line, also written to `target/bench.json`.
   *
-  * Each query executes through the `noop` sink so the FULL physical plan
-  * runs (sorts, projections, JSON extraction) — a bare `.count()` lets
-  * Catalyst prune most of the work and under-measures (VERDICT.md r1 §9).
-  * A small-SF warm-up pass absorbs JVM/codegen start-up cost; each query
-  * is then timed `Reps` times and reported as the MIN (spike-immune —
-  * see the rep rationale at the `Reps` definition), with rep-1 readings
-  * preserved in `queries_first`.
+  * A warm-up pass at the smallest SF absorbs JVM/codegen start-up cost;
+  * each query is then [[Harness.measure]]d `Reps` times and reported as
+  * the MIN (spike-immune, see `Reps`), with rep-1 readings preserved in
+  * `queries_first`. The official comparison between records is the work
+  * columns: executor-cpu seconds and shuffle-write MB are deterministic
+  * per plan (±5% across reps) and immune to host stalls, which can only
+  * inflate wall-clock.
   */
 object Bench {
+
+  /** On a host with documented 5-8x transient swings a single-shot
+    * reading is a lottery ticket, while the min of three is the engine's
+    * cost (a spike can only ADD time). Rep 1 doubles as the at-SF warm-up
+    * (AQE re-plan at the bench SF, codegen fills).
+    */
+  val Reps = 3
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Core count follows the driver contract: master is
-    // local[$SPARK_GRAFT_CPUS], because the driver re-runs this bench at
-    // a LOWER core count to measure how each query scales — a hard-coded
-    // master would make both runs identical and ruin that measurement.
-    // SPARK_GRAFT_BENCH_CPUS remains the explicit pin for the repo's own
-    // round-over-round records (BENCH_PARSED.json is produced at 16: the
-    // measured knee on this 32-vCPU box where executorCpuTime is
-    // plan-deterministic to ±5% — at 32 threads DRAM saturation bills
-    // stall cycles to cpu and a single contended rep can read 25× its
-    // quiet cost, BASELINE.md r12 8/16/32-thread table).
-    val cpus = sys.env.get("SPARK_GRAFT_BENCH_CPUS")
-      .orElse(sys.env.get("SPARK_GRAFT_CPUS"))
-      .getOrElse("16")
-    // an override must be LOUD (r13 ADVICE): a caller that set
-    // SPARK_GRAFT_CPUS and is also carrying the pin variable should see
-    // which one won
-    sys.env.get("SPARK_GRAFT_CPUS").filter(_ != cpus).foreach { v =>
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_CPUS=$v " +
-        s"overridden to local[$cpus] by SPARK_GRAFT_BENCH_CPUS")
-    }
+    val sfDir = Harness.sfDir
     graft.util.Freshness.check(Bench.getClass)
-    // defaults are set BEFORE withMaster so SPARK_GRAFT_EXTRA_CONF
-    // (applied inside it) can override them for explicit experiments
-    val spark = graft.util.Sessions.withMaster(
-      SparkSession.builder()
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // the default generated-class cache holds 100 entries; a session
-        // running 30+ distinct query shapes × ~5-10 codegen units each
-        // evicts its own warmup, so every "timed" run re-pays janino
-        // compilation (measured: up to 5× on regex-heavy plans). A
-        // long-running engine serving a query mix wants the cache sized to
-        // the working set — this is engine tuning, not bench cosmetics.
-        .config("spark.sql.codegen.cache.maxEntries", "10000"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Several operators localCheckpoint intermediate frames (the staged
-    // pipeline/graph lifecycles); those blocks stay pinned in the block
-    // manager until explicitly unpersisted. Across 45 queries × 3
-    // executions in ONE JVM the leftovers stack into storage-memory
-    // pressure that bills random later queries with eviction + GC pauses
-    // (observed as 5-8× single-query swings between otherwise-identical
-    // runs). A long-running engine scopes per-query state to the query —
-    // do the same here: drop every persisted RDD once its query's sink
-    // has completed. unpersist(blocking=false) so the cleanup itself
-    // isn't billed to the next timed query.
-    def dropQueryState(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-
-    // WORK metrics (r11 verdict item 2): this host's wall-clock band
-    // (1.3–1.8× inflation, 12–299 s rep spreads — BASELINE.md) swamps
-    // real plan deltas, so the OFFICIAL round-over-round comparison is
-    // executor-CPU seconds + shuffle bytes per query — deterministic
-    // per plan (±5% across reps on the kcore A/B) and immune to
-    // external stalls, which can only inflate wall-clock. The listener
-    // bus is drained (ListenerDrain, not a sleep) before zeroing and
-    // before reading, so one rep's event tail is never billed to its
-    // neighbor.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufB = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          cpuNs.addAndGet(s.stageInfo.taskMetrics.executorCpuTime)
-          shufB.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def drain(): Boolean =
-      try {
-        org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-        true
-      } catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[bench] listener bus failed to drain in 10s")
-        false
-      }
-
-    /** One timed execution → (wall s, executor-cpu s, shuffle-write MB);
-      * (-1, -1, -1) on failure. If the listener bus cannot be drained
-      * around the rep, the WORK columns are reported as -1
-      * (unattributable): an undrained bus means event tails can be
-      * cross-billed between reps, and ListenerDrain's contract is that
-      * such a rep must not enter the official record quietly (r12
-      * ADVICE). Wall-clock stays valid — it never depended on the bus.
-      */
-    def runOnce(name: String): (Double, Double, Double) = {
-      val preDrained = drain(); cpuNs.set(0L); shufB.set(0L)
-      val t0 = System.nanoTime()
-      // finally: a FAILED query may already have checkpointed frames —
-      // skipping the cleanup on the error path would leak its blocks
-      // into every subsequent timed query
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val postDrained = drain()
-        if (preDrained && postDrained) (wall, cpuNs.get / 1e9, shufB.get / 1e6)
-        else (wall, -1.0, -1.0)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        (-1.0, -1.0, -1.0)
-      } finally dropQueryState()
-    }
-
-    // SPIKE-IMMUNE instrument (r9 verdict item 1): each query is timed
-    // REPS times back-to-back and the OFFICIAL number is the min — on a
-    // host with documented 5-8× transient swings (BASELINE.md r8/r9
-    // triage: identical code, single-query readings 0.7 s → 6.0 s, one
-    // 18.8 s reading for a query whose min-of-5 is 2.6 s), a single-shot
-    // reading is a lottery ticket, while the min of three is the
-    // engine's actual cost (an external spike can only ADD time, never
-    // subtract it). The first rep doubles as the at-SF warmup — its
-    // reading is reported separately in `queries_first` so cold-start
-    // cost (AQE re-plan at the bench SF, codegen fills) stays visible
-    // instead of being averaged into the steady-state number.
-    val Reps = 3
-    // Inter-rep GC+drain, DEFAULT ON (SPARK_GRAFT_BENCH_GC=0 opts out):
-    // the heap debt one rep leaves (collected-but-unreclaimed
-    // shuffle/codegen buffers) bills its GC pauses to the NEXT rep's
-    // executorCpuTime. r13 measured it at sf1.0 (14/69 lines flagged);
-    // r14 measured it at sf0.1 on a fresh VM (late-bench minima 3-12×
-    // their standalone cost with byte-identical shuffle — containment
-    // 18.5 vs 6.5 cpu-s, BASELINE.md r14 session 2). The GC runs
-    // BETWEEN reps, outside every timed region, so per-query wall/cpu
-    // semantics are unchanged; it only adds untimed harness wall. The
-    // JSON's bench_inter_rep_gc field records the setting either way.
-    val interRepGc = !sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")
-    def run(name: String): Seq[(Double, Double, Double)] =
-      Seq.fill(Reps) {
-        if (interRepGc) { System.gc(); drain(); () }
-        runOnce(name)
-      }
-
-    // Warm-up: run EVERY headline query once at the smallest SF — fills
-    // the JIT, the codegen cache, and parquet footer caches cheaply.
-    // The per-query rep-1 at the bench SF then absorbs the AQE/plan
-    // adaptation cost (broadcast thresholds, coalesced partition counts
-    // differ per data size) and is excluded from the min when a later
-    // rep beats it.
-    val names = SparkEntry.headlineNames
-    val warmDir = "/root/testdata/sf0.001"
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      dropQueryState()
-    }
-    // settle the heap before timing: the warmup pass leaves tens of
-    // collected-but-unreclaimed shuffle/codegen buffers that otherwise
-    // bill their GC pauses to whichever timed query triggers them
-    System.gc()
-    val results = names.map(n => n -> run(n))
-    def minOf(reps: Seq[Double]): Double = {
-      val ok = reps.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
-    }
-    def metricCol(f: ((Double, Double, Double)) => Double): Seq[(String, Seq[Double])] =
-      results.map { case (k, reps) => k -> reps.map(f) }
-    def jsonMap(rows: Seq[(String, Double)]): String =
-      rows.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jsonMap(metricCol(_._1).map { case (k, r) => k -> minOf(r) })
-    val qsFirst = jsonMap(metricCol(_._1).map { case (k, r) => k -> r.head })
-    // official work columns: min across reps (cpu is plan-deterministic
-    // to ±5%; min sheds any GC/stall pollution the same way wall does)
-    val qsCpu = jsonMap(metricCol(_._2).map { case (k, r) => k ->
-      (math.round(minOf(r) * 100) / 100.0) })
-    val qsShuf = jsonMap(metricCol(_._3).map { case (k, r) => k ->
-      (math.round(minOf(r) * 10) / 10.0) })
-    // cpu trust boundary (r12 verdict item 5): executorCpuTime absorbs
-    // memory-stall cycles under contention — r12's artifact carried a
-    // 96 cpu-s reading for a 1.7 cpu-s plan. A rep whose cpu deviates
-    // >3× from the query's min rep means the host was contended during
-    // the measurement window; the min is still reported (it is the
-    // plan's cost) but the query is FLAGGED so a contaminated line can
-    // never enter an artifact silently again.
-    // flag = relative (>3× the min rep) AND absolute (>1 cpu-s excess):
-    // sub-second queries jitter a few hundred ms of cpu on scheduler
-    // noise alone, which is not the 96-s-for-a-1.7-s-plan class of
-    // contamination this flag exists to catch (the first artifact run
-    // flagged a 0.14→0.45 cpu-s wiggle — technically 3×, practically
-    // nothing)
-    // flag rule (r14): a query is flagged when the reported min lacks
-    // CORROBORATION — i.e. ≥2 of its reps deviate >3× (+1 cpu-s) from
-    // the min rep. A single deviant rep is this host's documented
-    // transient-spike class (2–10× single-rep wall/cpu spikes under
-    // external load, BASELINE.md): the min plus one agreeing rep pin
-    // the plan cost, and the raw per-rep column below carries the
-    // spike for anyone to recompute a stricter rule. Sustained
-    // contention — the r12 class this flag exists for, where a 1.7
-    // cpu-s plan read 96 across the window — deviates on every rep
-    // and still fires.
-    def deviant(ok: Seq[Double]): Int = ok.count { v =>
-      v > 3.0 * math.max(ok.min, 0.05) && v - ok.min > 1.0
-    }
-    val cpuFlagged = metricCol(_._2).collect {
-      case (k, r) if r.count(_ >= 0) >= 2 && deviant(r.filter(_ >= 0)) >= 2 =>
-        k
-    }
-    val qsCpuFlagged =
-      cpuFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // raw per-rep cpu seconds, unfiltered (-1 = invalidated rep): the
-    // evidence column — min/flag are derived views of this
-    val qsCpuReps = metricCol(_._2).map { case (k, r) =>
-      "\"" + k + "\":" + r.map(v => math.round(v * 100) / 100.0)
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = results.map { case (_, reps) => minOf(reps.map(_._1)) }
-      .filter(_ >= 0).sum
-    val totalCpu = results.map { case (_, reps) => minOf(reps.map(_._2)) }
-      .filter(_ >= 0).sum
-
-    // ---- streaming throughput rows (r9 verdict item 8): the streaming
-    // layer is spec-pinned for correctness but never appeared in BENCH,
-    // so a perf regression there was invisible round-over-round. Two
-    // MemoryStream drives, each split into two micro-batches so the
-    // cross-batch state machinery (keyed dedup; batch_id partition
-    // commits) is on the measured path. Throughput in rows/s — HIGHER
-    // is better, unlike the seconds above.
-    // stop a query that may never have started / already stopped, and
-    // delete a local temp tree — both on EVERY exit path (r12 ADVICE: the
-    // success-path-only stop left RocksDB-backed queries running and
-    // checkpoint/store temp dirs behind when a drive threw mid-bench)
-    def stopQuietly(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-      if (q != null) try q.stop() catch { case _: Throwable => () }
-    def deleteTree(dir: String): Unit =
-      if (dir != null) try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }
-
-    def streamingBench(): String = {
-      var dq: org.apache.spark.sql.streaming.StreamingQuery = null
-      var dq2: org.apache.spark.sql.streaming.StreamingQuery = null
-      var evq: org.apache.spark.sql.streaming.StreamingQuery = null
-      var base: String = null
-      try {
-      import spark.implicits._
-      implicit val sq = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions._
-      base = java.nio.file.Files
-        .createTempDirectory("graft-bench-stream").toString
-      // curate: the bench-SF documents corpus through the full gate
-      // chain (quality, decontamination vs a benchmark fingerprint set,
-      // cross-batch exact-dedup keyed state)
-      val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
-      val docs = docsDf
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        .as[graft.streaming.DocStream.Doc].collect()
-      val benchFps = docsDf.filter(col("doc_id") < 50)
-        .select(explode(graft.llm.TextAnalysis.shingles(col("text"), 5)).as("g"))
-        .select(substring(md5(col("g")), 1, 16).as("fp")).distinct()
-      val din = MemoryStream[graft.streaming.DocStream.Doc]
-      dq = graft.streaming.DocStream.curate(din.toDF(), benchFps)
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$base/cckpt").start()
-      val (d1, d2) = docs.splitAt(docs.length / 2)
-      val t0 = System.nanoTime()
-      din.addData(d1.toIndexedSeq: _*); dq.processAllAvailable()
-      din.addData(d2.toIndexedSeq: _*); dq.processAllAvailable()
-      val curateRate = docs.length / ((System.nanoTime() - t0) / 1e9)
-      dq.stop()
-      // larger-batch curate point: the 2×(corpus/2) drive above is
-      // state-store-fixed-cost dominated at bench SFs (~2,500-doc
-      // batches), so round-over-round deltas measured fixed cost, not
-      // throughput. Replicate the corpus 20× with offset ids and a
-      // per-copy suffix token (distinct fingerprints — the dedup state
-      // grows realistically instead of collapsing onto the base
-      // corpus) and drive 4 equal batches (25k docs each at sf0.1).
-      val bigDocs = (0 until 20).flatMap { c =>
-        docs.map(dd => dd.copy(doc_id = dd.doc_id + c.toLong * 10000000L,
-          text = if (dd.text == null) null else dd.text + " copyt" + c))
-      }
-      val din2 = MemoryStream[graft.streaming.DocStream.Doc]
-      dq2 = graft.streaming.DocStream.curate(din2.toDF(), benchFps)
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$base/cckpt2").start()
-      val perBatch = math.max(1, bigDocs.length / 4)
-      val t0b = System.nanoTime()
-      bigDocs.grouped(perBatch).foreach { b =>
-        din2.addData(b: _*); dq2.processAllAvailable()
-      }
-      val curateRateLarge =
-        bigDocs.length / ((System.nanoTime() - t0b) / 1e9)
-      dq2.stop()
-      // quantile-sketch sink: synthetic events through the additive
-      // batch_id-partitioned store (bucket agg + parquet commit per batch)
-      val evs = (1 to 200000).map(i => graft.streaming.EventStream.Event(
-        i.toLong, new java.sql.Timestamp(1700000000000L + i),
-        (i % 1000).toLong, "m", (i % 500) * 0.37))
-      val ein = MemoryStream[graft.streaming.EventStream.Event]
-      evq = graft.streaming.EventStream.quantileSketchSink(
-        ein.toDF(), s"$base/store", s"$base/sckpt")
-      val (e1, e2) = evs.splitAt(evs.length / 2)
-      val t1 = System.nanoTime()
-      ein.addData(e1: _*); evq.processAllAvailable()
-      ein.addData(e2: _*); evq.processAllAvailable()
-      val sketchRate = evs.length / ((System.nanoTime() - t1) / 1e9)
-      evq.stop()
-      s""""streaming":{"curate_docs_per_s":${math.round(curateRate)},""" +
-        s""""curate_docs_per_s_large":${math.round(curateRateLarge)},""" +
-        s""""sketch_events_per_s":${math.round(sketchRate)}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] streaming failed: ${e.getMessage}")
-        """"streaming":{"curate_docs_per_s":-1,""" +
-          """"curate_docs_per_s_large":-1,"sketch_events_per_s":-1}"""
-      } finally {
-        Seq(dq, dq2, evq).foreach(stopQuietly)
-        deleteTree(base)
-        dropQueryState()
-      }
-    }
-
-    // ---- million-key streaming state (r11 verdict item 7): the bench-SF
-    // streaming rows above hold ≤ ~100k state keys — fixed-cost territory.
-    // When the sf1.0 ScaleData derivative exists (tools/ScaleData, 10×
-    // sf0.1; regenerate after `sbt clean`), drive the SAME curate chain
-    // with its 50k-doc corpus replicated 20× (distinct fingerprints) in
-    // 4 waves — ~1M dedup-state keys — on the RocksDB state store (the
-    // provider a production deployment would run; the default in-memory
-    // HDFSBacked store measures a HashMap, not a state store), and
-    // report docs/s + the state operator's own row/byte telemetry.
-    // The LSH index-maintenance sink gets the sf1.0 corpus too: its
-    // corpus-sized state lives in parquet stores by design, so the
-    // number that matters is docs/s as the stores grow batch over batch.
-    // Failure sentinel shared by every largeStateBench exit path.
-    val largeStateFail =
-      """"curate_sf1_docs_per_s":-1,"curate_sf1_state_rows":-1,""" +
-        """"curate_sf1_state_mb":-1,"curate_sf1_out_rows":-1,""" +
-        """"restore_first_batch_s":-1,""" +
-        """"restore_docs_per_s":-1,"restore_reprocessed_rows":-1,""" +
-        """"restore_out_rows":-1,""" +
-        """"restore_dup_leaks":-1,"lsh_index_sf1_docs_per_s":-1"""
-    def largeStateBench(): String = {
-      val sf1 = "/root/repo/target/scaledata/sf1.0"
-      if (!new java.io.File(s"$sf1/documents.parquet").exists())
-        return largeStateFail
-      var dq: org.apache.spark.sql.streaming.StreamingQuery = null
-      var dq2: org.apache.spark.sql.streaming.StreamingQuery = null
-      var lq: org.apache.spark.sql.streaming.StreamingQuery = null
-      var base: String = null
-      try {
-        import spark.implicits._
-        implicit val sq = spark.sqlContext
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import org.apache.spark.sql.functions._
-        base = java.nio.file.Files
-          .createTempDirectory("graft-bench-bigstate").toString
-        val docsDf = spark.read.parquet(s"$sf1/documents.parquet")
-        val docs = docsDf
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          .as[graft.streaming.DocStream.Doc].collect()
-        val benchFps = docsDf.filter(col("doc_id") < 50)
-          .select(explode(graft.llm.TextAnalysis.shingles(col("text"), 5)).as("g"))
-          .select(substring(md5(col("g")), 1, 16).as("fp")).distinct()
-        // 19 corpus copies with distinct fingerprints (per-copy suffix
-        // token): waves 1-3 = copies 0-14 (750k docs, ~715k state keys),
-        // wave 4 = copies 15-18 (200k FRESH docs) + an exact re-send of
-        // copy 0 (50k duplicates) driven through a RESTARTED query — the
-        // recovery path (r12 verdict item 4: ingest at million-key state
-        // was proven, restore was not).
-        def copy(c: Int): Seq[graft.streaming.DocStream.Doc] =
-          docs.toSeq.map(dd =>
-            dd.copy(doc_id = dd.doc_id + c.toLong * 100000000L,
-              text = if (dd.text == null) null else dd.text + " copyt" + c))
-        val waves13 = (0 until 15).map(copy)
-        val wave4 = (15 until 19).flatMap(copy) ++ copy(0)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // foreachBatch counting sink: per-batch output rows, split out
-        // for re-sent copy-0 rows ((doc_id mod 1e12) < 1e8) so state
-        // continuity across the restart is ASSERTED, not assumed — a
-        // copy-0 row surviving the post-restart dedup means the
-        // fingerprint state did not come back.
-        val outRows = spark.sparkContext.longAccumulator("curateOut1")
-        val outRows2 = spark.sparkContext.longAccumulator("curateOut2")
-        val dup2 = spark.sparkContext.longAccumulator("curateDupLeak2")
-        val din = MemoryStream[graft.streaming.DocStream.Doc]
-        dq = graft.streaming.DocStream.curate(din.toDF(), benchFps)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            outRows.add(b.count()); ()
-          }
-          .option("checkpointLocation", s"$base/ckpt").start()
-        val t0 = System.nanoTime()
-        waves13.foreach { w =>
-          din.addData(w: _*); dq.processAllAvailable()
-        }
-        val ingested = waves13.map(_.length).sum
-        val rate = ingested / ((System.nanoTime() - t0) / 1e9)
-        val stateOps = Option(dq.lastProgress)
-          .map(_.stateOperators.toSeq).getOrElse(Seq.empty)
-        val stateRows = stateOps.map(_.numRowsTotal).sum
-        val stateMb = stateOps.map(_.memoryUsedBytes).sum / 1e6
-        dq.stop()
-        // restart from the checkpoint with wave 4 queued on the SAME
-        // source: the first trigger replays the offset log and reloads
-        // the RocksDB store at ~715k keys before any new row is touched
-        din.addData(wave4: _*)
-        val t1 = System.nanoTime()
-        dq2 = graft.streaming.DocStream.curate(din.toDF(), benchFps)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            // ONE action for both counts (r13 ADVICE): two separate
-            // counts on an un-persisted foreachBatch frame re-execute
-            // the stateful dedup plan — and its state-store access —
-            // twice per batch, double-costing the measured restore wall
-            val row = b.agg(
-              count(lit(1)),
-              count(when((col("doc_id") % 1000000000000L) < 100000000L,
-                lit(1)))).head()
-            outRows2.add(row.getLong(0)); dup2.add(row.getLong(1))
-            ()
-          }
-          .option("checkpointLocation", s"$base/ckpt").start()
-        dq2.processAllAvailable()
-        val restoreWall = (System.nanoTime() - t1) / 1e9
-        val restoreRate = wave4.length / restoreWall
-        val firstBatchS = dq2.recentProgress.headOption
-          .flatMap(p => Option(p.durationMs.get("triggerExecution")))
-          .map(_.longValue / 1000.0).getOrElse(-1.0)
-        // exactly-once across the restart: the restarted query's input
-        // must be wave 4 alone — any surplus is reprocessed history
-        val reprocessed =
-          dq2.recentProgress.map(_.numInputRows).sum - wave4.length
-        dq2.stop()
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        // LSH index maintenance: 4 batches of the raw sf1.0 corpus
-        val lin = MemoryStream[graft.streaming.DocStream.Doc]
-        lq = graft.streaming.DocStream.maintainLshIndex(
-          lin.toDF(), s"$base/corpus", s"$base/pairs", s"$base/lckpt")
-        val lPer = math.max(1, docs.length / 4)
-        val t2 = System.nanoTime()
-        docs.grouped(lPer).foreach { b =>
-          lin.addData(b.toIndexedSeq: _*); lq.processAllAvailable()
-        }
-        val lshRate = docs.length / ((System.nanoTime() - t2) / 1e9)
-        lq.stop()
-        s""""curate_sf1_docs_per_s":${math.round(rate)},""" +
-          s""""curate_sf1_state_rows":$stateRows,""" +
-          s""""curate_sf1_state_mb":${math.round(stateMb)},""" +
-          s""""curate_sf1_out_rows":${outRows.value},""" +
-          s""""restore_first_batch_s":$firstBatchS,""" +
-          s""""restore_docs_per_s":${math.round(restoreRate)},""" +
-          s""""restore_reprocessed_rows":$reprocessed,""" +
-          s""""restore_out_rows":${outRows2.value},""" +
-          s""""restore_dup_leaks":${dup2.value},""" +
-          s""""lsh_index_sf1_docs_per_s":${math.round(lshRate)}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] large-state streaming failed: ${e.getMessage}")
-        largeStateFail
-      } finally {
-        Seq(dq, dq2, lq).foreach(stopQuietly)
-        if (spark.conf.getOption(
-            "spark.sql.streaming.stateStore.providerClass").isDefined)
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        deleteTree(base)
-        dropQueryState()
-      }
-    }
-
-    val streaming = streamingBench()
-    val streamingSf1 = s""""streaming_sf1":{${largeStateBench()}}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,""" +
-        s""""total_cpu_s":${math.round(totalCpu * 100) / 100.0},""" +
-        s""""queries":$qs,"queries_first":$qsFirst,""" +
-        s""""queries_cpu_s":$qsCpu,"queries_shuffle_mb":$qsShuf,""" +
-        s""""queries_cpu_flagged":$qsCpuFlagged,""" +
-        s""""queries_cpu_reps":$qsCpuReps,""" +
-        s""""bench_threads":$cpus,"bench_inter_rep_gc":$interRepGc,""" +
-        s"""$streaming,$streamingSf1,"sf":"$sfDir"}"""
+    val json = Harness.json(Harness.withSession(record(_, sfDir)))
     println(json)
-    // stdout arrives wrapped in sbt "[info] " noise (both prior rounds
-    // show "parsed": null on the driver) — also drop the bare line where
-    // it can be read machine-readably: target/bench.json (the well-known
-    // path, printed below so any harness can lift the record verbatim),
-    // the repo root (sbt's cwd) and /tmp
     new java.io.File("target").mkdirs()
-    // BENCH_PARSED.json is the OFFICIAL sf0.1/16-thread record by repo
-    // convention — only refresh it when this run IS that config, so an
-    // sf1.0 regen or an ad-hoc smoke run can't clobber the official
-    // artifact (it happened: a contended smoke overwrote the r13 record
-    // mid-session and had to be restored from git).
-    val official = sfDir == "/root/testdata/sf0.1" && cpus == "16"
+    // BENCH_PARSED.json is the official sf0.1/16-thread record: only that
+    // configuration refreshes it, so an ad-hoc run cannot clobber it
+    val official = sfDir == s"${Harness.TestData}/sf0.1" && Harness.cpus == 16
     (Seq("target/bench.json", "/tmp/graft_bench.json") ++
       (if (official) Seq("BENCH_PARSED.json") else Nil))
-      .foreach { p =>
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n")
-      }
+      .foreach(p => java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n"))
     println(s"[bench] json written to ${new java.io.File("target/bench.json").getAbsolutePath}")
-    spark.stop()
+  }
+
+  private def runOnce(spark: SparkSession, name: String, sfDir: String): Work =
+    try Harness.measure(spark)(Harness.noop(spark, name, sfDir))
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      Work(-1, None)
+    }
+
+  private def minOf(reps: Seq[Double]): Double = reps.filter(_ >= 0).minOption.getOrElse(-1.0)
+
+  private def round(v: Double, digits: Int): Double =
+    math.round(v * math.pow(10, digits)) / math.pow(10, digits)
+
+  /** The bench record, in its published key order. */
+  def record(spark: SparkSession, sfDir: String): ListMap[String, Any] = {
+    val names = SparkEntry.headlineNames
+    names.foreach(n =>
+      try Harness.measure(spark)(Harness.noop(spark, n, Harness.WarmDir))
+      catch { case NonFatal(_) => () })
+    val results = names.map(n => n -> Seq.fill(Reps)(runOnce(spark, n, sfDir)))
+    def col(f: Work => Double): ListMap[String, Seq[Double]] =
+      ListMap(results.map { case (k, reps) => k -> reps.map(f) }: _*)
+    val walls = col(_.wallS)
+    val cpus = col(_.cpuS)
+    // failed queries drop out of the totals, so the totals keep meaning
+    // "sum over the queries that ran"; queries_failed names the rest
+    val failed = walls.collect { case (k, r) if minOf(r) < 0 => k }.toSeq
+    if (failed.nonEmpty)
+      System.err.println(
+        s"[bench] ${failed.size}/${names.size} queries failed: ${failed.mkString(",")}")
+    // cpu trust boundary: executorCpuTime absorbs memory-stall cycles
+    // under contention (one record carried 96 cpu-s for a 1.7 cpu-s
+    // plan). A query is flagged when >=2 of its reps exceed 3x (and
+    // +1 cpu-s) its min rep: one deviant rep is the host's transient
+    // spike class, sustained contention deviates on every rep
+    def deviant(ok: Seq[Double]): Int =
+      ok.count(v => v > 3.0 * math.max(ok.min, 0.05) && v - ok.min > 1.0)
+    val flagged = cpus.collect {
+      case (k, r) if r.count(_ >= 0) >= 2 && deviant(r.filter(_ >= 0)) >= 2 => k
+    }.toSeq
+    ListMap(
+      "metric" -> "total",
+      "value" -> walls.values.map(minOf).filter(_ >= 0).sum,
+      "unit" -> "sec",
+      "reps" -> Reps,
+      "total_cpu_s" -> round(cpus.values.map(minOf).filter(_ >= 0).sum, 2),
+      "queries" -> walls.map { case (k, r) => k -> minOf(r) },
+      "queries_first" -> walls.map { case (k, r) => k -> r.head },
+      "queries_cpu_s" -> cpus.map { case (k, r) => k -> round(minOf(r), 2) },
+      "queries_shuffle_mb" -> col(_.shuffleWriteMb).map { case (k, r) => k -> round(minOf(r), 1) },
+      "queries_cpu_flagged" -> flagged,
+      // raw per-rep cpu (-1 = failed or unattributable rep): the evidence
+      // the min and the flag are derived from
+      "queries_cpu_reps" -> cpus.map { case (k, r) => k -> r.map(round(_, 2)) },
+      "queries_failed" -> failed,
+      "bench_threads" -> Harness.cpus,
+      // the harness collects the heap after every measured body
+      "bench_inter_rep_gc" -> true,
+      "streaming" -> StreamingBench.curate(spark, sfDir),
+      "streaming_sf1" -> StreamingBench.largeState(spark, StreamingBench.Sf1Dir),
+      "sf" -> sfDir)
   }
 }

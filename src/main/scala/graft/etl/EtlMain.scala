@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.Harness
 
 /** The `python etl.py` equivalent (ref E1): run the full pipeline over a
   * fixtures directory and overwrite-load the four tables as parquet.
@@ -11,16 +11,9 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.etl.EtlMain [fixturesDir] [outDir]"
   */
 object EtlMain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
     val fixtures = if (args.length > 0) args(0) else EtlPipeline.defaultDir
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-etl-out"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
 
     val result = EtlPipeline.runDefault(spark, fixtures)
@@ -29,6 +22,5 @@ object EtlMain {
       s"encounters=${result.encounters.count()} " +
       s"diagnoses=${result.diagnoses.count()} logs=${result.logs.count()} " +
       s"→ $outDir")
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.Harness
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r12 verdict item 6): the ETL fixture pipeline is
@@ -22,16 +22,8 @@ import org.apache.spark.sql.functions._
   * scale vs the fixture.
   */
 object EtlParseBench {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
     val lines = if (args.length > 0) args(0).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.util.Sessions.withMaster(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // ---- generate the messy CSV once (driver-side: ~170 MB, seconds)
     val dir = new java.io.File("target/etlbench")
     dir.mkdirs()
@@ -78,16 +70,13 @@ object EtlParseBench {
         sys.error(s"rename $tmp -> $csv failed")
     }
 
-    def timeIt(label: String)(df: => org.apache.spark.sql.DataFrame): Double = {
-      val reps = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = reps.min
-      println(f"[etlparse] $label: min=${best}%.2f s " +
-        f"(${lines / best / 1e6}%.2f M lines/s; reps ${reps.map(r => f"$r%.2f").mkString(",")})")
-      best
+    def timeIt(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val reps = (1 to 3).map(_ =>
+        Harness.measure(spark)(df.write.format("noop").mode("overwrite").save()))
+      val best = reps.minBy(_.wallS)
+      println(f"[etlparse] $label: min=${best.wallS}%.2f s cpu=${best.cpuS}%.2f s " +
+        f"(${lines / best.wallS / 1e6}%.2f M lines/s; " +
+        f"reps ${reps.map(r => f"${r.wallS}%.2f").mkString(",")})")
     }
 
     // S2 alone: line scan + per-line delimiter sniff + pad/truncate
@@ -104,6 +93,5 @@ object EtlParseBench {
       graft.etl.Encounters.read(spark, csv.getPath)
         .withColumn("admit_dt", graft.etl.Cleaning.parseDatetime(col("admit_dt")))
         .explain("formatted")
-    spark.stop()
   }
 }

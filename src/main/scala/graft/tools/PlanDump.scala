@@ -1,65 +1,122 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import java.nio.file.{Files, Paths}
 
-/** Diagnostic main: write `.explain("formatted")` for registered
-  * queries to files — the audit substrate for the optimization rounds
-  * (Exchange count, join strategy, PushedFilters/ReadSchema per plan)
-  * and the generator of the committed `plans/rNN/<query>_{before,after}`
-  * evidence.
+import scala.util.control.NonFatal
+
+import graft.SparkEntry
+import graft.harness.Harness
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+/** Dumps `explain(formatted)` of registered queries: the audit substrate
+  * for optimization work (Exchange count, join strategy,
+  * PushedFilters/ReadSchema per plan).
   *
-  * Usage: runMain graft.tools.PlanDump <outDir> <name>[,<name>...]|headline [sfDir]
+  *   - `runMain graft.tools.PlanDump headline [sfDir]` regenerates
+  *     docs/PLANS.md: every headline query's plan, the committed evidence
+  *     that each has the shape a large cluster needs (pushdown, broadcast
+  *     dims, partial aggs, TakeOrderedAndProject). Re-run after
+  *     plan-affecting changes.
+  *   - `runMain graft.tools.PlanDump <outDir> <name>[,<name>...]|headline [sfDir]`
+  *     writes `<outDir>/<name>.txt` per query (the `plans/rNN/` evidence)
+  *     and prints exchange/scan/join counts.
   *
-  * Plans are the STATIC (pre-AQE) formatted physical plans — the shape
-  * the builder controls; AQE runtime rewrites are audited separately
-  * with [[PlanProbe]] (executed plan). Building a plan still runs any
-  * eager stageCheckpoint jobs inside the query builders, so a dump at a
-  * big SF does real (bounded) work.
+  * Plans are the STATIC (pre-AQE) formatted physical plans. With `EXEC=1`
+  * each query is executed once and the EXECUTED (post-AQE) plan is dumped
+  * instead — the only place AQE's runtime join rewrites and exchange reuse
+  * show — followed by each operator's non-zero SQL metrics (rows out,
+  * time, spill). Building a plan still runs any eager stage checkpoints,
+  * so a dump at a big SF does real (bounded) work; what it pins is
+  * released after each query.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val sf = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = args(1) match {
-      case "headline" => graft.SparkEntry.headlineNames
-      case s => s.split(',').toSeq
+  def main(args: Array[String]): Unit = Harness.withSession { spark =>
+    args.toSeq match {
+      case Seq("headline", rest @ _*) =>
+        headline(spark, rest.headOption.getOrElse(s"${Harness.TestData}/sf0.01"))
+      case Seq(outDir, names, rest @ _*) =>
+        val selected = if (names == "headline") SparkEntry.headlineNames else names.split(',').toSeq
+        dump(spark, outDir, selected, rest.headOption.getOrElse(s"${Harness.TestData}/sf0.1"),
+          sys.env.contains("EXEC"))
+      case _ =>
+        sys.error("usage: PlanDump headline [sfDir] | <outDir> <name>[,name...]|headline [sfDir]")
     }
-    new java.io.File(outDir).mkdirs()
-    // EXEC=1: execute each query ONCE through the noop sink and dump
-    // the EXECUTED (post-AQE) formatted plan instead of the static one
-    // — the capture that shows AQE's runtime join rewrites, which the
-    // static plan cannot (a join-strategy hint and an AQE flip both
-    // surface only here).
-    // A noop-sink write would execute a COPY of the plan (the write
-    // command's own QueryExecution) and leave `df`'s AQE plan
-    // unexecuted, so EXEC mode collects instead — these registry
-    // queries all return bounded (top-k/agg) results.
-    val exec = sys.env.contains("EXEC")
+  }
+
+  /** Writes docs/PLANS.md from the static plans of the headline queries. */
+  def headline(spark: SparkSession, sfDir: String): Unit = {
+    val sb = new StringBuilder
+    sb.append("# Physical plans — headline queries\n\n")
+    sb.append(s"Generated by `graft.tools.PlanDump headline` on `$sfDir`. What to look for:\n")
+    sb.append("`PushedFilters`/pruned `ReadSchema` at every parquet scan, ")
+    sb.append("`BroadcastHashJoin` for dimension joins, `partial_...` aggregate ")
+    sb.append("modes before each exchange (map-side combine), ")
+    sb.append("`TakeOrderedAndProject` for top-K, and codegen ids on the hot ")
+    sb.append("operators.\n")
+    SparkEntry.headlineNames.foreach { name =>
+      plan(spark, name, sfDir, exec = false) match {
+        case Right((p, _)) => sb.append(s"\n## $name\n\n```\n$p```\n")
+        case Left(msg) => sb.append(s"\n## $name\n\nFAILED TO PLAN: $msg\n")
+      }
+    }
+    Files.createDirectories(Paths.get("docs"))
+    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+    println(s"[plandump] wrote docs/PLANS.md (${SparkEntry.headlineNames.size} queries)")
+  }
+
+  /** Writes `<outDir>/<name>.txt` per query, static or (`exec`) executed. */
+  def dump(spark: SparkSession, outDir: String, names: Seq[String], sfDir: String,
+      exec: Boolean): Unit = {
+    Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sf)
-      if (exec) df.collect()
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outDir, s"$name.txt"), plan)
-      val ex = "Exchange".r.findAllIn(plan).length
-      val scans = "Scan parquet".r.findAllIn(plan).length
-      println(s"[plan] $name exchanges=$ex scans=$scans " +
-        s"bhj=${"BroadcastHashJoin".r.findAllIn(plan).length} " +
-        s"smj=${"SortMergeJoin".r.findAllIn(plan).length}")
-      // drop any checkpoint blocks the builder pinned, same rule as the
-      // timing harnesses: leaked blocks distort the NEXT query's work
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      val (text, ops) = plan(spark, name, sfDir, exec)
+        .fold(msg => (s"FAILED TO PLAN: $msg\n", Nil), identity)
+      Files.writeString(Paths.get(outDir, s"$name.txt"),
+        if (ops.isEmpty) text else text + ops.mkString("\n== Operator metrics ==\n", "\n", "\n"))
+      def n(op: String) = op.r.findAllIn(text).length
+      println(s"[plan] $name exchanges=${n("Exchange")} scans=${n("Scan parquet")} " +
+        s"bhj=${n("BroadcastHashJoin")} smj=${n("SortMergeJoin")} reused=${n("ReusedExchange")}")
     }
-    spark.stop()
+  }
+
+  /** One query's formatted plan and, when `exec`, its operator metrics;
+    * Left(message) when it fails to build or run, so one broken query
+    * cannot abort a dump and leave stale plans.
+    */
+  private def plan(spark: SparkSession, name: String, sfDir: String,
+      exec: Boolean): Either[String, (String, Seq[String])] =
+    try Harness.releasing(spark) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      // collect, not a noop write: the write would execute a COPY of the
+      // plan (its own QueryExecution) and leave df's AQE plan unexecuted;
+      // registry queries all return bounded results
+      if (exec) df.collect()
+      Right((df.queryExecution.explainString(FormattedMode),
+        if (exec) metrics(df.queryExecution.executedPlan) else Nil))
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+      Left(e.getMessage)
+    }
+
+  /** Per-operator SQL metrics of an executed plan (the SQL tab of a
+    * headless session), indented by depth. AQE nests materialized stages
+    * under QueryStageExec, whose subtrees plain traversal skips.
+    */
+  private def metrics(root: SparkPlan): Seq[String] = {
+    def walk(n: SparkPlan, d: Int): Seq[String] = {
+      val shown = n.metrics.toSeq.collect {
+        case (k, m) if m.value > 0 &&
+            (k.contains("ime") || k == "numOutputRows" || k.contains("pill")) => s"$k=${m.value}"
+      }
+      val kids = n match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => n.children
+      }
+      s"${"  " * d}${n.nodeName}: ${shown.mkString(" ")}" +: kids.flatMap(walk(_, d + 1))
+    }
+    walk(root, 0)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive a K×-scaled copy of an sf directory for
@@ -35,18 +35,10 @@ import org.apache.spark.sql.functions._
   * copies).
   */
 object ScaleData {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = graft.harness.Harness.withSession { spark =>
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/target/scaledata/sf0.3"
     val k = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame): DataFrame =
       (0 until k).map(i => df.withColumn("_copy", lit(i.toLong)))
@@ -265,6 +257,5 @@ object ScaleData {
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
 
     println(s"[scale] wrote ${k}x of $src to $dst")
-    spark.stop()
   }
 }

@@ -1,120 +1,47 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
 import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.harness.Harness
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc single-query timing harness for performance iteration:
-  * `runMain graft.tools.TimeQuery <name>[,<name>...] [reps]` — warms each
-  * query once at sf0.001 (same protocol as [[graft.Bench]]), then times
-  * `reps` executions at SPARK_GRAFT_SF_DIR through the noop sink and
-  * prints per-rep seconds. `EXPLAIN=1` additionally dumps the formatted
-  * physical plan — the fast loop for "is this the plan I want".
+/** Ad-hoc single-query timing for performance iteration:
+  * `runMain graft.tools.TimeQuery <name>[,<name>...] [reps]` warms each
+  * query once at the smallest SF, then [[Harness.measure]]s `reps`
+  * executions at SPARK_GRAFT_SF_DIR through the noop sink — the same
+  * lifecycle and work listener [[graft.Bench]] uses. Per rep
+  * it prints wall seconds and WORK: executor cpu, shuffle write/read and
+  * spill. On a host with multi-second stalls, wall-clock A/Bs of plan
+  * changes are noise; cpu and shuffle volume are deterministic per plan
+  * (kcore: wall reps spread 12-299 s while cpu held within ±5%).
   *
-  * `WORK=1` additionally reports per-rep WORK — summed executor CPU
-  * seconds and shuffle write/read bytes from a stage listener. On a
-  * host with intermittent multi-second stalls (this one), wall-clock
-  * A/Bs of plan changes are noise; CPU + shuffle volume are
-  * deterministic per plan and are the numbers to compare. (Measured on
-  * the kcore restructure: wall reps spread 12–299 s while cpu held
-  * within ±5% across reps.)
+  * `EXPLAIN=1` also prints the formatted physical plan; `STAGES=1` also
+  * prints the 12 costliest stages of each rep.
   */
 object TimeQuery {
-
-  private val cpuNs = new AtomicLong(0L)
-  private val shufW = new AtomicLong(0L)
-  private val shufR = new AtomicLong(0L)
-  // STAGES=1: per-stage rollup for attributing WORK inside one query —
-  // (cpu s, spill bytes, output rows, shuffle write) keyed by the
-  // stage's first line of callsite detail
-  private val stageRows =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long, Long)]
-
-  private final class WorkListener extends SparkListener {
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      cpuNs.addAndGet(m.executorCpuTime)
-      shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      if (sys.env.contains("STAGES"))
-        stageRows.add((s"${s.stageInfo.stageId}[${s.stageInfo.numTasks}t]:" +
-          s.stageInfo.name.take(60),
-          m.executorCpuTime, m.memoryBytesSpilled + m.diskBytesSpilled,
-          m.shuffleWriteMetrics.recordsWritten, m.shuffleWriteMetrics.bytesWritten))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(',').toSeq)
       .getOrElse(sys.error("usage: TimeQuery <name>[,name...] [reps]"))
     val reps = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val work = sys.env.contains("WORK")
-    // defaults are set BEFORE withMaster so SPARK_GRAFT_EXTRA_CONF (applied
-    // inside it) can override them — scale sweeps need e.g.
-    // shuffle.partitions grown with data (160 at sf10) without a recompile
-    val spark = graft.util.Sessions.withMaster(
-      SparkSession.builder()
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"),
-      cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (work) spark.sparkContext.addSparkListener(new WorkListener)
+    Harness.withSession(run(_, names, reps, Harness.sfDir))
+  }
 
-    // same per-execution state scoping as Bench: checkpointed RDDs from
-    // one rep otherwise stack into storage pressure that slows later
-    // reps AND later queries (observed: kcore reps 9s→27s at 3× data,
-    // then a 53s first rep on the NEXT query)
-    def dropQueryState(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-
+  def run(spark: SparkSession, names: Seq[String], reps: Int, sfDir: String): Unit =
     names.foreach { name =>
-      val q = SparkEntry.queries(name)
-      q(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      dropQueryState()
+      Harness.measure(spark)(Harness.noop(spark, name, Harness.WarmDir))
       if (sys.env.contains("EXPLAIN"))
-        q(spark, sfDir).explain("formatted")
+        Harness.releasing(spark)(SparkEntry.queries(name)(spark, sfDir).explain("formatted"))
       val times = (1 to reps).map { _ =>
-        if (work) {
-          // deterministic drain (r11 ADVICE): block until every posted
-          // listener event has dispatched before zeroing, so a rep's
-          // tail can't be billed to the next rep even mid host stall
-          org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-          cpuNs.set(0L); shufW.set(0L); shufR.set(0L)
-        }
-        val t0 = System.nanoTime()
-        q(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (work) {
-          org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-          println(f"[work] $name wall=$t%.3f cpu=${cpuNs.get / 1e9}%.2f " +
-            f"shufW=${shufW.get / 1e6}%.1fMB shufR=${shufR.get / 1e6}%.1fMB")
-          if (sys.env.contains("STAGES")) {
-            import scala.jdk.CollectionConverters._
-            stageRows.asScala.toSeq.sortBy(-_._2).take(12).foreach {
-              case (nm, c, sp, rec, bw) =>
-                println(f"[stage] cpu=${c / 1e9}%8.2f spill=${sp / 1e6}%8.1fMB " +
-                  f"rows=$rec%12d shufW=${bw / 1e6}%8.1fMB  $nm")
-            }
-            stageRows.clear()
+        val w = Harness.measure(spark)(Harness.noop(spark, name, sfDir))
+        println(f"[work] $name wall=${w.wallS}%.3f cpu=${w.cpuS}%.2f " +
+          f"shufW=${w.shuffleWriteMb}%.1fMB shufR=${w.shuffleReadMb}%.1fMB " +
+          f"spill=${w.spillMb}%.1fMB")
+        if (sys.env.contains("STAGES"))
+          w.stages.getOrElse(Nil).sortBy(-_.cpuNs).take(12).foreach { s =>
+            println(f"[stage] cpu=${s.cpuNs / 1e9}%8.2f spill=${s.spillBytes / 1e6}%8.1fMB " +
+              f"rows=${s.records}%12d shufW=${s.shuffleWriteBytes / 1e6}%8.1fMB  ${s.name}")
           }
-        }
-        dropQueryState()
-        // settle the heap between reps: at ≥sf1.0 a rep leaves the heap
-        // near-full of dead shuffle/agg buffers and the NEXT rep's task
-        // cpu absorbs the collection debt (measured: rep2 4-5× rep1 at
-        // sf1.0/32t without this) — the Bench post-warmup System.gc
-        // rationale applied per rep
-        System.gc()
-        t
+        w.wallS
       }
       println(f"[time] $name reps=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}%.3f")
     }
-    spark.stop()
-  }
 }

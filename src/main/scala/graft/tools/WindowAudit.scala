@@ -1,7 +1,9 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window}
 
 /** Static scale audit: walk every registered query's optimized logical
   * plan and flag `Window` operators with an EMPTY partitionSpec — the
@@ -17,35 +19,30 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan, Wi
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val bad = graft.harness.Harness.withSession(audit(_, sf))
+    if (bad > 0) sys.exit(1)
+  }
 
-    def hasLimitBelow(p: LogicalPlan): Boolean =
-      p.collectFirst { case _: GlobalLimit => () }.nonEmpty
-
+  /** Prints one line per flagged window; returns the unbounded count. */
+  def audit(spark: SparkSession, sf: String): Int = {
     var bad = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, sf).queryExecution.optimizedPlan
+        val plan =
+          graft.harness.Harness.releasing(spark)(fn(spark, sf).queryExecution.optimizedPlan)
         plan.foreach {
           case w: Window if w.partitionSpec.isEmpty =>
-            val bounded = hasLimitBelow(w.child)
+            val bounded = w.child.collectFirst { case _: GlobalLimit => () }.nonEmpty
             if (bounded) println(s"[window-audit] $name: bounded (limit below)")
             else { bad += 1; println(s"[window-audit] $name: UNPARTITIONED") }
           case _ =>
         }
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(s"[window-audit] $name: build failed: ${e.getMessage.take(120)}")
       }
     }
     println(s"[window-audit] done, $bad unbounded unpartitioned window(s)")
-    spark.stop()
-    if (bad > 0) sys.exit(1)
+    bad
   }
 }

@@ -2,18 +2,18 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener-bus drain for the work-metric instruments
-  * ([[graft.tools.TimeQuery]] `WORK=1`, [[graft.Bench]]'s per-query
-  * cpu/shuffle columns).
+/** Deterministic listener-bus drain for the work listener of
+  * [[graft.harness.Harness]]: its `measure` drains before zeroing the
+  * counters and again before reading them.
   *
   * The async listener bus delivers stage-completed events a beat after
-  * the job's collect/save returns; the first WORK implementation settled
-  * with fixed 500 ms sleeps, which on the very host-stall conditions the
-  * tool exists to work around could bill a rep's late events to the next
-  * rep (r11 ADVICE). `LiveListenerBus.waitUntilEmpty()` is the exact
-  * primitive — block until every posted event has been dispatched to
-  * every queue — but it is `private[spark]`, hence this one-method shim
-  * under the `org.apache.spark` package (the
+  * the job's collect/save returns; fixed sleeps, on the very host-stall
+  * conditions the work columns exist to work around, could bill one
+  * rep's late events to the next rep.
+  * `LiveListenerBus.waitUntilEmpty()` is the exact primitive — block
+  * until every posted event has been dispatched to every queue — but it
+  * is `private[spark]`, hence this one-method shim under the
+  * `org.apache.spark` package (the
   * [[org.apache.spark.sql.graftshim.ColumnBridge]] technique,
   * measurement-harness only: nothing on a query's execution path).
   *
