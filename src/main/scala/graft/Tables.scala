@@ -66,7 +66,8 @@ object Tables {
     * upperBound, numPartitions) so a 1000-executor cluster fans the table
     * scan out instead of funneling through one connection. No database
     * ships with this harness — the parquet loaders above are the tested
-    * path; this is the production binding.
+    * path; this is the production binding. Deliberate library API (the
+    * reference's S4 read), pinned by SinksSpec against embedded Derby.
     */
   def jdbcTable(s: SparkSession, url: String, table: String,
       partitionColumn: Option[(String, Long, Long, Int)] = None,

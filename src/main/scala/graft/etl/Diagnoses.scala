@@ -1,7 +1,7 @@
 package graft.etl
 
+import graft.ops.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,59 +50,51 @@ object Diagnoses {
         col("code._system").as("code_system"),
         // text → tri-state bool via lower()=="true" (ref etl.py:108-111:
         // anything else, e.g. "yes", becomes false; missing stays null)
-        when(col("isPrimary").isNull, lit(null).cast(BooleanType))
-          .otherwise(lower(col("isPrimary")) === "true").as("is_primary"),
+        (lower(col("isPrimary")) === "true").as("is_primary"),
         parseRecordedAt(col("recordedAt")).as("recorded_at"))
       .withColumn("_ord", Ingest.ordinal)
 
   def clean(df: DataFrame): (DataFrame, DataFrame) = {
-    val originalJson = Cleaning.rowJson(Seq(
-      col("encounter_id"), col("code"), col("code_system"),
-      col("is_primary"), col("recorded_at")))
-
-    // --- F5: drop rows with missing code + log full original row ---
-    val f5Log = df.filter(col("code").isNull)
-      .select(
-        col("encounter_id"),
-        col("code"),
-        lit("dropped for missing code").as("reason"),
-        originalJson.as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"))
-    val withCode = df.filter(col("code").isNotNull)
-
     // --- P10/P11: fills. ELIF quirk kept (ref etl.py:633-640): a row
-    // missing BOTH gets encounter_id filled but is_primary left null ---
-    val filled = withCode
+    // missing BOTH gets encounter_id filled but is_primary left null.
+    // D3: streaming seen-set dedup ≡ keep-first-by-ingest-order over the
+    // FILLED key (two null-encounter rows with the same code dedupe as
+    // ("UNKNOWN", code) — ref etl.py:643-658). Rows missing a code rank
+    // among themselves only (their key's code is null), so the marks of
+    // the rows F5 keeps are those of a dedup over the kept rows alone ---
+    val marked = df
       .withColumn("_orig_eid", col("encounter_id"))
       .withColumn("_orig_ip", col("is_primary"))
-      .withColumn("_had_eid", col("encounter_id").isNotNull)
       .withColumn("encounter_id", coalesce(col("encounter_id"), lit("UNKNOWN")))
       .withColumn("is_primary",
-        when(col("_had_eid") && col("is_primary").isNull, false)
+        when(col("_orig_eid").isNotNull && col("is_primary").isNull, false)
           .otherwise(col("is_primary")))
+      .withColumn("_rank",
+        Dedup.rank(Seq(col("encounter_id"), col("code")), col("_ord")))
 
-    // --- D3: streaming seen-set dedup ≡ keep-first-by-ingest-order over
-    // the FILLED key (two null-encounter rows with the same code dedupe
-    // as ("UNKNOWN", code) — ref etl.py:643-658) ---
-    val (kept, droppedDups) = graft.ops.Dedup.keepFirst(
-      filled, Seq(col("encounter_id"), col("code")), col("_ord"))
-    // log key = FILLED id, but original_value = the PRE-fill row
-    val dupLog = droppedDups
-      .select(
-        col("encounter_id"),
-        col("code"),
-        lit("duplicate encounter_id + code").as("reason"),
-        Cleaning.rowJson(Seq(
-          col("_orig_eid").as("encounter_id"), col("code"), col("code_system"),
-          col("_orig_ip").as("is_primary"), col("recorded_at"))).as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"))
-    val deduped = kept.drop("_orig_eid", "_orig_ip", "_had_eid", "_ord")
+    // both log rules carry the full PRE-fill row; the dup log's key is the
+    // FILLED id, F5's the original one
+    val originalJson = Cleaning.rowJson(Seq(
+      col("_orig_eid").as("encounter_id"), col("code"), col("code_system"),
+      col("_orig_ip").as("is_primary"), col("recorded_at")))
+    val logs = QualityLog.rows(marked, Seq(
+      // --- F5: drop rows with missing code + log full original row ---
+      col("code").isNull -> QualityLog.entry(
+        "encounter_id" -> col("_orig_eid"),
+        "reason" -> lit("dropped for missing code"),
+        "original_value" -> originalJson),
+      (col("code").isNotNull && col("_rank") > 1) -> QualityLog.entry(
+        "encounter_id" -> col("encounter_id"),
+        "code" -> col("code"),
+        "reason" -> lit("duplicate encounter_id + code"),
+        "original_value" -> originalJson)))
 
     // --- P2 clean_utf8 (ref etl.py:690): strings only; the is_primary
     // bool and recorded_at timestamp survive ---
-    val cleaned = Patients.applyCleanUtf8(deduped)
-
-    (cleaned, QualityLog.combine(Seq(f5Log, dupLog)))
+    val cleaned = Patients.applyCleanUtf8(marked
+      .filter(col("code").isNotNull && col("_rank") === 1)
+      .drop("_orig_eid", "_orig_ip", "_ord", "_rank"))
+    (cleaned, logs)
   }
 
   def run(spark: SparkSession, path: String): (DataFrame, DataFrame) =

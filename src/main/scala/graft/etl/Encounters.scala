@@ -1,7 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.ops.Dedup
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -65,88 +65,63 @@ object Encounters {
       .withColumn("admit_dt", Cleaning.parseDatetime(col("admit_dt")))
       .withColumn("discharge_dt", Cleaning.parseDatetime(col("discharge_dt")))
 
-    def parseLog(raw: String, parsedC: String, colname: String) = parsed
-      // wsTrim: a tabs-only cell is "missing" (no log), like Python strip
-      .filter(col(raw).isNotNull && Cleaning.wsTrim(col(raw)) =!= "" &&
-        col(parsedC).isNull)
-      .select(
-        col("patient_id"),
-        lit(filename).as("filename"),
-        lit(colname).as("column_name"),
-        col(raw).as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("invalid_datetime_format").as("reason"))
-    val admitLog = parseLog("_admit_raw", "admit_dt", "admit_dt")
-    val dischargeLog = parseLog("_discharge_raw", "discharge_dt", "discharge_dt")
+    // --- D2 dedup marks by encounter_id: keep first by ingest order,
+    // log EVERY member of a dup group (keep=False, ref etl.py:539-548) ---
+    val eid = Seq(col("encounter_id"))
+    val marked = parsed
+      .withColumn("_rank", Dedup.rank(eid, col("_ord")))
+      .withColumn("_group_n", Dedup.groupSize(eid))
+    val kept = col("_rank") === 1
 
-    // --- D2 dedup by encounter_id: log EVERY member of a dup group
-    // (keep=False, ref etl.py:539-548), keep first by ingest order.
-    // Log filename = the row's source_file with NO fallback: the
-    // reference's row.get("source_file", default) never falls back
-    // because the column always exists — a null stays null. ---
-    val dupLog = graft.ops.Dedup
-      .dupGroupMembers(parsed, Seq(col("encounter_id")))
-      .select(
-        col("patient_id"),
-        col("source_file").as("filename"),
-        lit("encounter_id").as("column_name"),
-        col("encounter_id").as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("duplicate_encounter_id").as("reason"))
-    val (deduped, _) = graft.ops.Dedup
-      .keepFirst(parsed, Seq(col("encounter_id")), col("_ord"))
-
-    // --- F2 discharge < admit: LOG then NULLIFY (not drop) ---
+    // F2 discharge < admit is LOGGED then NULLIFIED (not dropped); F3
+    // missing discharge keeps the row and fires for F2-nullified rows
+    // too, because F2 runs first (ref order etl.py:552-574)
     val badTime = col("discharge_dt") < col("admit_dt") // null-safe: null → false
-    val f2Log = deduped.filter(badTime)
-      .select(
-        col("patient_id"),
-        col("source_file").as("filename"),
-        lit("discharge_dt").as("column_name"),
-        concat(col("discharge_dt").cast(StringType), lit("+00:00"))
-          .as("original_value"), // str(aware Timestamp) keeps the offset
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("discharge_before_admit").as("reason"))
-    val timeFixed = deduped.withColumn("discharge_dt",
-      when(badTime, lit(null).cast("timestamp")).otherwise(col("discharge_dt")))
-
-    // --- F3 missing discharge (row kept; fires for F2-nullified rows too,
-    // because F2 runs first — ref order etl.py:552-574) ---
-    val f3Log = timeFixed.filter(col("discharge_dt").isNull)
-      .select(
-        col("patient_id"),
-        col("source_file").as("filename"),
-        lit("discharge_dt").as("column_name"),
-        lit(null).cast(StringType).as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("missing_discharge").as("reason"))
-
-    // --- F4 encounter_type enum → "UNKNOWN" + log ---
+    val fixedDischarge = when(badTime, lit(null).cast("timestamp"))
+      .otherwise(col("discharge_dt"))
+    // F4 encounter_type enum → "UNKNOWN"
     val validTypes = Seq("inpatient", "outpatient", "ed")
     val invalidType = !col("encounter_type").isin(validTypes: _*) ||
       col("encounter_type").isNull
-    val f4Log = timeFixed.filter(invalidType)
-      .select(
-        col("patient_id"),
-        col("source_file").as("filename"),
-        lit("encounter_type").as("column_name"),
-        col("encounter_type").as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("invalid_encounter_type").as("reason"))
-    val typed = timeFixed.withColumn("encounter_type",
-      when(invalidType, "UNKNOWN").otherwise(col("encounter_type")))
+
+    // P7 parse failures log the raw cell under the CSV name; the later
+    // rules log each row's source_file with NO fallback: the reference's
+    // row.get("source_file", default) never falls back because the column
+    // always exists — a null stays null
+    def entry(file: Column, column: String, reason: String, fields: (String, Column)*) =
+      QualityLog.entry(Seq("patient_id" -> col("patient_id"), "filename" -> file,
+        "column_name" -> lit(column), "reason" -> lit(reason)) ++ fields: _*)
+    def parseRule(raw: String, parsedC: String) =
+      // wsTrim: a tabs-only cell is "missing" (no log), like Python strip
+      (col(raw).isNotNull && Cleaning.wsTrim(col(raw)) =!= "" && col(parsedC).isNull) ->
+        entry(lit(filename), parsedC, "invalid_datetime_format",
+          "original_value" -> col(raw))
+    val logs = QualityLog.rows(marked, Seq(
+      parseRule("_admit_raw", "admit_dt"),
+      parseRule("_discharge_raw", "discharge_dt"),
+      (col("_group_n") > 1) -> entry(col("source_file"), "encounter_id",
+        "duplicate_encounter_id", "original_value" -> col("encounter_id")),
+      (kept && badTime) -> entry(col("source_file"), "discharge_dt",
+        "discharge_before_admit",
+        // str(aware Timestamp) keeps the offset
+        "original_value" -> concat(col("discharge_dt").cast(StringType), lit("+00:00"))),
+      (kept && fixedDischarge.isNull) -> entry(col("source_file"), "discharge_dt",
+        "missing_discharge"),
+      (kept && invalidType) -> entry(col("source_file"), "encounter_type",
+        "invalid_encounter_type", "original_value" -> col("encounter_type"))))
 
     // --- P9 LOS hours; P8 tz strip is a no-op under UTC session tz ---
-    val withLos = typed.withColumn("length_of_stay_hours",
-      Cleaning.lengthOfStayHours(col("admit_dt"), col("discharge_dt")))
+    val withLos = marked.filter(kept)
+      .withColumn("discharge_dt", fixedDischarge)
+      .withColumn("encounter_type",
+        when(invalidType, "UNKNOWN").otherwise(col("encounter_type")))
+      .withColumn("length_of_stay_hours",
+        Cleaning.lengthOfStayHours(col("admit_dt"), col("discharge_dt")))
 
     // --- outer clean_utf8 pass (ref etl.py:684): lowercases the UNKNOWN
     // sentinel; timestamps/doubles survive ---
     val cleaned = Patients.applyCleanUtf8(
-      withLos.drop("_ord", "_admit_raw", "_discharge_raw"))
-
-    val logs = QualityLog.combine(
-      Seq(admitLog, dischargeLog, dupLog, f2Log, f3Log, f4Log))
+      withLos.drop("_ord", "_admit_raw", "_discharge_raw", "_rank", "_group_n"))
     (cleaned, logs)
   }
 

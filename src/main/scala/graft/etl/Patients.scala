@@ -1,10 +1,10 @@
 package graft.etl
 
 import graft.functions.NfkcLower
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import graft.ops.Dedup
 import graft.ops.Checkpoints.StageCheckpoint
 
 /** Patients vertical (ref `etl.py` E1 step 2, SURVEY §3):
@@ -73,96 +73,77 @@ object Patients {
       .withColumn("_dob_p2", Cleaning.parseDatePass2(col("dob")))
       .withColumn("dob_parsed", coalesce(col("_dob_p1"), col("_dob_p2")))
 
-    // ONE materialization point between the derive chain and its five
-    // consumers (three log selects, the dedup cascade, the cleaned
-    // output). Without it, Catalyst's project collapse re-inlines the
-    // whole height/weight/sex/dob when-chain into EVERY union branch —
-    // the generated processNext() blows janino's 64 KB method limit
-    // (interpreted fallback + an ERROR line per run), and each log
-    // channel re-plans the CSV scan. Checkpointed, the chain runs once
-    // and the fan-out reads 11 materialized rows; at 100 TB this is the
-    // ingest→fan-out stage boundary a real deployment wants anyway.
-    val keyed = withDob
-      // bround = HALF_EVEN, matching pandas/numpy .round(0); Spark's
-      // round() is HALF_UP and diverges on exact .5 values (54.5 → 55
-      // instead of 54), silently changing which rows count as dups
-      .withColumn("_hr", bround(col("height_cm"), 0))
-      .withColumn("_wr", bround(col("weight_kg"), 0))
-      .stageCheckpoint()
-
-    val weightLog = keyed
-      .filter(col("_w.flagged"))
-      .select(
-        col("patient_id"),
-        lit(filename).as("filename"),
-        // str(NaN) = "nan" in the reference's log stringification
-        coalesce(col("weight").cast(StringType), lit("nan")).as("original_value"),
-        coalesce(col("weight_kg").cast(StringType), lit("nan")).as("cleaned_value"),
-        lit("weight").as("column_name"),
-        col("_w.reason").as("reason"))
-
-    val sexLog = keyed
-      .filter(col("_sex_reason").isNotNull)
-      .select(
-        col("patient_id"),
-        lit(filename).as("filename"),
-        coalesce(col("sex").cast(StringType), lit("nan")).as("original_value"),
-        // ref schema inconsistency kept: missing/invalid log `mapped_code`,
-        // the U case logs `cleaned_value` (etl.py:333-363, SURVEY §1.4)
-        when(col("_sex_reason").isin("missing_value", "invalid_code"), "0")
-          .as("mapped_code"),
-        when(col("_sex_reason") === "unknown_or_missing", "0").as("cleaned_value"),
-        col("_sex_reason").as("reason"))
-
-    val dobLog = keyed
-      .filter(col("dob").isNull || col("dob_parsed").isNull ||
-        col("_dob_p1").isNull)
-      .select(
-        col("patient_id"),
-        lit(filename).as("filename"),
-        lit("dob").as("column_name"),
-        col("dob").cast(StringType).as("original_value"),
-        // the swap log carries the PARSED value (ref etl.py:407)
-        when(col("_dob_p1").isNull && col("_dob_p2").isNotNull,
-          col("_dob_p2").cast(StringType))
-          .otherwise(lit(null).cast(StringType)).as("cleaned_value"),
-        when(col("dob").isNull, "missing_value")
-          .when(col("_dob_p2").isNotNull, "day_month_swapped")
-          .otherwise("unparseable_date").as("reason"))
-
-    // --- D1 dedup: two-key cascade with keep-first-by-ingest-order ---
+    // --- D1 dedup marks: two-key cascade with keep-first-by-ingest-order
     // (ref etl.py:430-490). The log marks BOTH masks on the ORIGINAL rows,
     // but the drop CASCADES (person-dedup runs on id-dedup survivors), so
     // a person-dup whose group head was id-dropped may survive while
     // still being logged — pandas quirk, kept (SURVEY §7 hard part (a)).
     val personKeys = Seq(col("given_name"), col("family_name"), col("dob"),
       col("_hr"), col("_wr"))
-    val (deduped, dupRows) = graft.ops.Dedup.cascade(
-      keyed, Seq(col("patient_id")), personKeys, col("_ord"))
 
-    val dupLog = dupRows
-      .select(
-        col("patient_id"),
-        lit(filename).as("filename"),
-        lit("duplicate_entry").as("column_name"),
-        Cleaning.rowJson(Seq(
+    // ONE materialization point between the derive chain and its two
+    // consumers (the log rules and the dedup cascade's second pass).
+    // Without it, Catalyst's project collapse re-inlines the whole
+    // height/weight/sex/dob when-chain into each consumer — the generated
+    // processNext() can outgrow janino's 64 KB method limit (interpreted
+    // fallback + an ERROR line per run), and each consumer re-plans the
+    // CSV scan. Checkpointed, the chain and both dedup windows run once;
+    // at 100 TB this is the ingest→fan-out stage boundary a real
+    // deployment wants anyway.
+    val marked = withDob
+      // bround = HALF_EVEN, matching pandas/numpy .round(0); Spark's
+      // round() is HALF_UP and diverges on exact .5 values (54.5 → 55
+      // instead of 54), silently changing which rows count as dups
+      .withColumn("_hr", bround(col("height_cm"), 0))
+      .withColumn("_wr", bround(col("weight_kg"), 0))
+      .withColumn("_id_dup", Dedup.rank(Seq(col("patient_id")), col("_ord")) > 1)
+      .withColumn("_person_dup", Dedup.rank(personKeys, col("_ord")) > 1)
+      .stageCheckpoint()
+
+    def entry(fields: (String, Column)*) = QualityLog.entry(
+      Seq("patient_id" -> col("patient_id"), "filename" -> lit(filename)) ++ fields: _*)
+    val logs = QualityLog.rows(marked, Seq(
+      col("_w.flagged") -> entry(
+        // str(NaN) = "nan" in the reference's log stringification
+        "original_value" -> coalesce(col("weight").cast(StringType), lit("nan")),
+        "cleaned_value" -> coalesce(col("weight_kg").cast(StringType), lit("nan")),
+        "column_name" -> lit("weight"),
+        "reason" -> col("_w.reason")),
+      col("_sex_reason").isNotNull -> entry(
+        "original_value" -> coalesce(col("sex").cast(StringType), lit("nan")),
+        // ref schema inconsistency kept: missing/invalid log `mapped_code`,
+        // the U case logs `cleaned_value` (etl.py:333-363, SURVEY §1.4)
+        "mapped_code" -> when(col("_sex_reason").isin("missing_value", "invalid_code"), "0"),
+        "cleaned_value" -> when(col("_sex_reason") === "unknown_or_missing", "0"),
+        "reason" -> col("_sex_reason")),
+      (col("dob").isNull || col("dob_parsed").isNull || col("_dob_p1").isNull) -> entry(
+        "column_name" -> lit("dob"),
+        "original_value" -> col("dob"),
+        // the swap log carries the PARSED value (ref etl.py:407)
+        "cleaned_value" -> when(col("_dob_p1").isNull && col("_dob_p2").isNotNull,
+          col("_dob_p2").cast(StringType)),
+        "reason" -> when(col("dob").isNull, "missing_value")
+          .when(col("_dob_p2").isNotNull, "day_month_swapped")
+          .otherwise("unparseable_date")),
+      (col("_id_dup") || col("_person_dup")) -> entry(
+        "column_name" -> lit("duplicate_entry"),
+        "original_value" -> Cleaning.rowJson(Seq(
           col("given_name"), col("family_name"),
           col("dob").cast(StringType).as("dob"),
           col("height_cm"),
           // ref logs a typo'd key "weight_cm" that never exists → None;
           // kept as an always-null field (etl.py:475)
-          lit(null).cast(StringType).as("weight_cm"))).as("original_value"),
-        lit(null).cast(StringType).as("cleaned_value"),
-        lit("duplicate_removed").as("reason"))
+          lit(null).cast(StringType).as("weight_cm"))),
+        "reason" -> lit("duplicate_removed"))))
+
+    // the cascade's second pass: person-dedup over the id-dedup survivors
+    val (deduped, _) = Dedup.keepFirst(marked.filter(!col("_id_dup")), personKeys, col("_ord"))
 
     // --- P12 drop raw + helper cols; P2 clean_utf8 LAST over string cols ---
     val dropped = deduped.drop(
       "weight", "height", "_w", "_sex_reason", "_dob_p1", "_dob_p2",
-      "_hr", "_wr", "_ord")
-    val cleaned = applyCleanUtf8(dropped)
-
-    val logs = QualityLog.combine(Seq(weightLog, sexLog, dobLog, dupLog))
-    (cleaned, logs)
+      "_hr", "_wr", "_id_dup", "_person_dup", "_ord")
+    (applyCleanUtf8(dropped), logs)
   }
 
   /** P2 applied to every string-typed column (ref applymap(clean_utf8):

@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StringType
 
 /** The data-quality log side-channel — the reference's one genuinely
   * engine-like idea (ref `etl.py:664,694,719`): every cleaning operator
@@ -14,14 +14,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * relies on pandas' union-of-dict-keys; we declare the union schema
   * explicitly (SURVEY.md §1.4 catalogues the observed key sets, including
   * the `mapped_code`-vs-`cleaned_value` inconsistency, which is kept) and
-  * combine with `unionByName(allowMissingColumns = true)` — the exact
-  * Spark analogue.
+  * this object is the only place that knows it: a vertical names the
+  * fields a log row sets ([[entry]]) and [[rows]] fills in the rest.
   *
-  * Scale: log rows are produced by the same filter predicates that drive
-  * the cleaning `when`-chains, so each log channel is one extra codegen'd
-  * projection over the already-scanned rows — no second source scan, no
-  * driver-side accumulation (the reference's global `logs` list would be a
-  * driver OOM at 100 TB).
+  * Scale: a vertical states its log as `(condition, entry)` rules over
+  * the one frame it already annotates for cleaning, and [[rows]] turns
+  * all of them into log rows in a single generator pass over that frame —
+  * no per-rule branch, no union, no second source scan, no driver-side
+  * accumulation (the reference's global `logs` list would be a driver OOM
+  * at 100 TB).
   */
 object QualityLog {
 
@@ -30,24 +31,21 @@ object QualityLog {
     "patient_id", "encounter_id", "code", "filename", "column_name",
     "original_value", "cleaned_value", "mapped_code", "reason")
 
-  val schema: StructType =
-    StructType(columns.map(StructField(_, StringType, nullable = true)))
-
-  /** Conform a partial log projection to the full union schema: missing
-    * columns become nulls (pandas' union-of-dict-keys behavior).
+  /** One log row: a struct over [[columns]] with the named fields set and
+    * every other field a string null (pandas' union-of-dict-keys).
     */
-  def conform(df: DataFrame): DataFrame = {
-    val present = df.columns.toSet
-    df.select(columns.map { c =>
-      if (present(c)) col(c).cast(StringType).as(c)
-      else lit(null).cast(StringType).as(c)
-    }: _*)
+  def entry(fields: (String, Column)*): Column = {
+    val set = fields.toMap
+    require(set.keySet.subsetOf(columns.toSet),
+      s"unknown log columns: ${set.keySet -- columns}")
+    struct(columns.map(c => set.getOrElse(c, lit(null)).cast(StringType).as(c)): _*)
   }
 
-  def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Combine per-operator log channels into the single `logs` table. */
-  def combine(logs: Seq[DataFrame]): DataFrame =
-    logs.map(conform).reduce(_.unionByName(_, allowMissingColumns = true))
+  /** The log rows of `df`: one row per rule whose condition holds on an
+    * input row (a row may fire several rules, or none). A null condition
+    * counts as false, as in `filter`.
+    */
+  def rows(df: DataFrame, rules: Seq[(Column, Column)]): DataFrame =
+    df.select(inline(filter(
+      array(rules.map { case (cond, e) => when(cond, e) }: _*), _.isNotNull)))
 }

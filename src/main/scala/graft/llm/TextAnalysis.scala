@@ -90,11 +90,6 @@ object TextAnalysis {
       length(regexp_replace(lower(text), "[^a-z]", "")).cast("double") /
         length(text).cast("double"))
 
-  def digitRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      length(regexp_replace(text, "[^0-9]", "")).cast("double") /
-        length(text).cast("double"))
-
   val defaultStopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is")
 

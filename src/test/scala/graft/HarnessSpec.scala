@@ -61,7 +61,7 @@ class HarnessSpec extends SparkSpec {
   test("TimeQuery, PlanDump and Verify run on a caller's session and leave it running") {
     val dir = Files.createTempDirectory("harness-modes")
     val before = pinned
-    tools.TimeQuery.run(spark, Seq(Query), 1, Sf)
+    tools.TimeQuery.run(spark, Seq(Query, "etl_quality_logs_pipeline"), 1, Sf)
     tools.PlanDump.dump(spark, s"$dir/static", Seq(Query), Sf, exec = false)
     tools.PlanDump.dump(spark, s"$dir/exec", Seq(Query), Sf, exec = true)
     Verify.dump(spark, Sf, s"$dir/verify", Seq(Query))
@@ -72,5 +72,11 @@ class HarnessSpec extends SparkSpec {
     assert(static.contains("Scan parquet") && !static.contains("Operator metrics"))
     assert(exec.contains("== Operator metrics ==") && exec.contains("numOutputRows="))
     assert(spark.read.parquet(s"$dir/verify/$Query").count() > 0)
+    // and nothing stays cached: the session's cache manager holds no plan
+    // of the fixture pipeline the ETL query ran
+    val r = Harness.releasing(spark)(graft.etl.EtlPipeline.runDefault(spark))
+    Seq(r.patients, r.encounters, r.diagnoses, r.logs).foreach { df =>
+      assert(df.storageLevel == StorageLevel.NONE)
+    }
   }
 }

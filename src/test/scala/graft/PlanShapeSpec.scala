@@ -98,6 +98,15 @@ class PlanShapeSpec extends SparkSpec {
       assert(r.encounters.collect().nonEmpty)
       assert(r.diagnoses.collect().nonEmpty)
       assert(r.logs.collect().nonEmpty)
+      // one read per source per output: each vertical derives its log rows
+      // from one annotated frame, so the logs read encounters and
+      // diagnoses once each (patients come from the stage checkpoint)
+      def fileScans(df: org.apache.spark.sql.DataFrame) =
+        "FileScan".r.findAllIn(planOf(df).toString).length
+      assert(fileScans(r.logs) === 2, planOf(r.logs).toString)
+      Seq(r.patients, r.encounters, r.diagnoses).foreach { df =>
+        assert(fileScans(df) <= 1, planOf(df).toString)
+      }
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)

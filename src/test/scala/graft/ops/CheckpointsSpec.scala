@@ -45,10 +45,10 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   test("ETL pipeline output is mode-invariant (fan-out stage boundary)") {
-    // Patients.clean stages the derive chain before its five consumers;
+    // Patients.clean stages the derive chain before its two consumers;
     // the full pipeline must produce identical rows in both modes.
-    // EtlPipeline.run, NOT runDefault: the latter memoizes per
-    // (session, dir) and would hand the second call the first's frames.
+    // Each call builds a fresh pipeline (nothing is memoized or cached),
+    // so the second run re-executes under the reliable mode.
     def runFresh() = graft.etl.EtlPipeline.run(spark,
       "/root/repo/fixtures/patients.csv",
       "/root/repo/fixtures/encounters.csv",
