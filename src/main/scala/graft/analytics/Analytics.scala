@@ -117,6 +117,7 @@ object Analytics {
     * column shuffles every column's value space; the sketch is one pass
     * with fixed state. `rsd` is the sketch's relative standard deviation
     * (a 1-sigma bound, not a maximum error), matching [[approxDistinct]].
+    * Deliberate library API, pinned by AnalyticsSpec.
     */
   def profileApprox(df: DataFrame, rsd: Double = 0.05): DataFrame =
     profileImpl(df, Some(rsd))

@@ -4,6 +4,7 @@ import graft.{Q, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Checkpoints.StageCheckpoint
+import graft.ops.Edges
 
 /** Graph analytics over the customer↔supplier co-purchase graph (the
   * same edge construction as `graph_pagerank_copurchase`: one edge per
@@ -14,9 +15,9 @@ import graft.ops.Checkpoints.StageCheckpoint
   */
 object GraphQueries extends QueryPack {
 
-  /** Distinct co-purchase edges (cu, su). Kept in lockstep with the
-    * pagerank query's construction — cited there. */
-  private def edges(s: SparkSession, d: String): DataFrame =
+  /** Distinct co-purchase edges (cu, su) — also the edge list of
+    * `graph_pagerank_copurchase` (RelationalExt). */
+  private[analytics] def edges(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
@@ -110,11 +111,7 @@ object GraphQueries extends QueryPack {
   private val labelProp = Q(
     "graph_label_propagation",
     (s, d) => {
-      val sym = {
-        val e = edges(s, d).stageCheckpoint()
-        e.select(col("cu").as("u"), col("su").as("v"))
-          .unionByName(e.select(col("su").as("u"), col("cu").as("v")))
-      }
+      val sym = Edges.symmetric(edges(s, d).stageCheckpoint(), "cu", "su")
       lpa(sym, 2).groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
         .agg(sum(col("sz")).as("n_nodes"),
           count(lit(1)).as("n_communities"),
@@ -143,12 +140,8 @@ object GraphQueries extends QueryPack {
   private val modularity = Q(
     "graph_modularity",
     (s, d) => {
-      val sym = {
-        val e = edges(s, d).stageCheckpoint()
-        e.select(col("cu").as("u"), col("su").as("v"))
-          .unionByName(e.select(col("su").as("u"), col("cu").as("v")))
-          .stageCheckpoint()
-      }
+      val sym = Edges.symmetric(edges(s, d).stageCheckpoint(), "cu", "su")
+        .stageCheckpoint()
       val lbl = lpa(sym, 2).stageCheckpoint()
       // (sym stays checkpointed here unlike the registered lpa query:
       // modularity fans sym out to canon, m, ein and deg — the lazy
@@ -268,14 +261,10 @@ object GraphQueries extends QueryPack {
   private val kcore = Q(
     "graph_kcore_rounds",
     (s, d) => {
-      // checkpoint the DISTINCT EDGE frame, not just the peel's sym
-      // (kcorePeel stages sym itself): without it the union's two
-      // branches each re-run the orders⋈lineitem distinct inside the
-      // first checkpoint action (the lpa A/B measured the single-build
-      // shape at −27% cpu / −5 shuffle-read MB at sf0.1/16t)
-      val e = edges(s, d).stageCheckpoint()
-      val sym = e.select(col("cu").as("u"), col("su").as("v"))
-        .unionByName(e.select(col("su").as("u"), col("cu").as("v")))
+      // the DISTINCT EDGE frame is staged before the swapped union
+      // ([[Edges]]); kcorePeel stages sym itself. The lpa A/B measured
+      // the single-build shape at −27% cpu at sf0.1/16t.
+      val sym = Edges.symmetric(edges(s, d).stageCheckpoint(), "cu", "su")
       kcorePeel(sym, k = 3, rounds = 3).orderBy(col("round"))
     },
     Some(kcoreSql(k = 3, rounds = 3)),
@@ -300,24 +289,20 @@ object GraphQueries extends QueryPack {
   private val bfs = Q(
     "graph_bfs_hops",
     (s, d) => {
-      // staged HERE (not inside Bfs): the unreachable-bucket pass below
-      // reuses the same frame — unstaged, it re-planned the whole
-      // orders⋈lineitem edge build a second time. The DISTINCT EDGE
-      // frame is ALSO staged: without it the union's two branches each
-      // re-run the distinct agg inside the sym checkpoint action
-      // (−5.2 shuffle-read MB at sf0.1/16t). Dropping the sym
-      // checkpoint instead was A/B'd and lost (+0.4 cpu-s): bfs fans
-      // sym out to 6 consumers (3 rounds + sources + nodes + anti),
-      // and six lazy re-unions cost more than one materialization.
-      val e = edges(s, d).stageCheckpoint()
-      val sym = e.select(col("cu").as("u"), col("su").as("v"))
-        .unionByName(e.select(col("su").as("u"), col("cu").as("v")))
+      // sym is staged HERE (Bfs.hops takes it as given): the
+      // unreachable-bucket pass below reuses the same frame — unstaged,
+      // it re-planned the whole orders⋈lineitem edge build a second
+      // time. The distinct edge frame under it is staged too
+      // ([[Edges]]). Dropping the sym checkpoint was A/B'd and lost
+      // (+0.4 cpu-s): bfs fans sym out to 6 consumers (3 rounds +
+      // sources + nodes + anti), and six lazy re-unions cost more than
+      // one materialization.
+      val sym = Edges.symmetric(edges(s, d).stageCheckpoint(), "cu", "su")
         .stageCheckpoint()
       val sources = sym.select(col("u").as("node")).distinct()
         .filter(col("node") < 1000000L)
         .orderBy(col("node")).limit(3)
-      val state = graft.ops.Bfs.hops(sym, sources, rounds = 3,
-        stageEdges = false)
+      val state = graft.ops.Bfs.hops(sym, sources, rounds = 3)
       val nodes = sym.select(col("u").as("node")).distinct()
       val unreachable = nodes
         .join(state.select(col("node")), Seq("node"), "left_anti")
@@ -530,9 +515,7 @@ object GraphQueries extends QueryPack {
   private val assortativity = Q(
     "graph_assortativity",
     (s, d) => {
-      val e = edges(s, d).stageCheckpoint()
-      val sym = e.select(col("cu").as("u"), col("su").as("v"))
-        .unionByName(e.select(col("su").as("u"), col("cu").as("v")))
+      val sym = Edges.symmetric(edges(s, d).stageCheckpoint(), "cu", "su")
       val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       sym
         .join(deg.select(col("u"), col("deg").as("dx")), "u")

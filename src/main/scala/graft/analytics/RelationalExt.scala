@@ -378,18 +378,14 @@ object RelationalExt extends QueryPack {
   private val pagerank = Q(
     "graph_pagerank_copurchase",
     (s, d) => {
-      val edges = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("cu"), (col("l_suppkey") + 1000000L).as("su"))
-        .distinct()
       // Top-10 via orderBy+limit → TakeOrderedAndProject: per-partition
       // heaps + a 10-row driver merge, NOT a single-partition sort of the
       // whole node set (the round-4 unpartitioned row_number window moved
       // every customer+supplier rank through one task — a scale-killer at
       // 100×). rank is then derived on the 10-row frame by
       // [[graft.ops.BoundedRank]], so no WindowExec appears in this plan.
-      val top = graft.ops.PageRank.ranks(edges, "cu", "su", iters = 3)
+      val top = graft.ops.PageRank.ranks(GraphQueries.edges(s, d), "cu", "su",
+          iters = 3)
         .orderBy(round(col("r"), 6).desc, col("node"))
         .limit(10)
         .select(col("node"), round(col("r"), 6).as("r6"))

@@ -29,24 +29,7 @@ object StatsQueries extends QueryPack {
     */
   private val triangles = Q(
     "graph_triangle_count",
-    (s, d) => {
-      // one shuffle builds the per-order supplier sets (collect_set does
-      // map-side partial merging), pairs expand WITHIN the array — the
-      // self-join formulation re-shuffles the distinct frame twice more
-      val perOrder = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_suppkey"))).as("sks"))
-      val edges = perOrder
-        .select(explode(expr(
-          """flatten(transform(sks, (x, i) ->
-            |  transform(slice(sks, i + 2, size(sks)), y -> struct(x AS u, y AS v))))"""
-            .stripMargin)).as("p"))
-        .groupBy(col("p.u").as("u"), col("p.v").as("v"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= 5)
-        .select(col("u"), col("v"))
-      graft.ops.Triangles.census(edges, "u", "v")
-    },
+    (s, d) => graft.ops.Triangles.census(suppEdges(s, d), "u", "v"),
     Some("""WITH os AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk
            |  FROM lineitem),
            |e AS (SELECT a.sk AS u, b.sk AS v FROM os a
@@ -79,7 +62,10 @@ object StatsQueries extends QueryPack {
     * serve the same order ≥ 5 times) — shared by the triangle census,
     * the clustering-coefficient query, and the two-hop reach query.
     * Pair expansion stays WITHIN an order's supplier array (≤ 7
-    * lineitems ⇒ ≤ 21 pairs) — never a supplier self-join.
+    * lineitems ⇒ ≤ 21 pairs) — never a supplier self-join: one shuffle
+    * builds the per-order supplier sets (collect_set merges map-side),
+    * where the self-join formulation re-shuffles the distinct frame
+    * twice more.
     */
   private def suppEdges(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.lineitem(s, d)

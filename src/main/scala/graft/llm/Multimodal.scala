@@ -301,6 +301,7 @@ object Multimodal {
     * pigeonhole search. Undecodable payloads hash to null and drop —
     * corrupt crawl bytes never poison the pair set. Same 100 TB shape:
     * one decode pass for signatures, payloads never pairwise-compared.
+    * Deliberate library API, pinned by LlmSpecs.
     */
   def phashNearDupImage(media: DataFrame, maxDist: Int = 3): DataFrame = {
     val hashUdf = udf((p: Array[Byte]) => ImageCodec.aHash(p))
@@ -358,6 +359,7 @@ object Multimodal {
     * tw, th, out_w, out_h, out_bytes) with out_w/out_h read back from a
     * decode of the produced payload — the roundtrip check is part of the
     * contract; undecodable inputs yield (0, 0, 0).
+    * Deliberate library API, pinned by LlmSpecs.
     */
   def resizeToImage(media: DataFrame, box: Int = 224)
       (implicit spark: SparkSession): DataFrame = {

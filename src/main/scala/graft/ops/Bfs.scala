@@ -20,17 +20,13 @@ import graft.ops.Checkpoints.StageCheckpoint
 object Bfs {
 
   /** Hop distances from `sources` (a bounded frame with one `node`
-    * column) over `sym` (must hold both directions as (u, v)).
-    * Returns (node, dist) for every node reached within `rounds` hops;
-    * dist 0 = the sources themselves.
+    * column) over `sym` (must hold both directions as (u, v) —
+    * [[Edges.symmetric]]; every round re-reads it, so a caller with an
+    * expensive edge build stages it first). Returns (node, dist) for
+    * every node reached within `rounds` hops; dist 0 = the sources
+    * themselves.
     */
-  /** `stageEdges = false` when the caller already staged `sym` (and
-    * reuses it elsewhere) — staging twice would materialize a second
-    * copy of the edge frame.
-    */
-  def hops(sym: DataFrame, sources: DataFrame, rounds: Int,
-      stageEdges: Boolean = true): DataFrame = {
-    val symC = if (stageEdges) sym.stageCheckpoint() else sym
+  def hops(sym: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     // distinct: duplicate source rows would emit duplicate (node, 0)
     // state rows and fan out every downstream join/count
     var frontier = sources.select(col("node")).distinct().stageCheckpoint()
@@ -39,7 +35,7 @@ object Bfs {
     // re-plans — one materialization per round, not two
     var state = frontier.withColumn("dist", lit(0L))
     for (r <- 1 to rounds) {
-      val next = symC.join(frontier.select(col("node").as("u")), Seq("u"))
+      val next = sym.join(frontier.select(col("node").as("u")), Seq("u"))
         .select(col("v").as("node")).distinct()
         .join(state.select(col("node")), Seq("node"), "left_anti")
         .stageCheckpoint()

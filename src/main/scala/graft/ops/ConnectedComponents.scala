@@ -41,32 +41,10 @@ object ConnectedComponents {
     */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
     // materialized once: the edge list is re-joined EVERY round, and the
     // caller's edge frame is typically an expensive subplan (LSH pair
-    // generation) that must not re-run per iteration.
-    // Canonical dedup before symmetrizing (r15, the PageRank.symmetric
-    // trim): distinct() on (least, greatest) sees HALF the rows of the
-    // former symmetrize-then-distinct, and the swapped union re-adds
-    // each non-self-loop edge's other orientation without introducing
-    // duplicates — the produced SET is identical for every input class
-    // (duplicates, both orientations, self-loops kept once), so labels
-    // are unchanged; ConnectedComponentsSpec pins the equivalence.
-    // canon checkpointed BEFORE the swapped union (r15 session 2, the
-    // PageRank.symmetric finding): with a lazy canon the union's two
-    // branches each re-run the canonical distinct agg — and here the
-    // caller's whole edge subplan under it (LSH pair generation) —
-    // inside the `both` checkpoint action; exchange reuse dedups the
-    // shuffle write, not the agg pass above it.
-    val canon = sym
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .stageCheckpoint()
-    val both = canon.filter(col("u") =!= col("v"))
-      .select(col("v").as("u"), col("u").as("v"))
-      .union(canon)
+    // generation) that must not re-run per iteration ([[Edges]]).
+    val both = Edges.symmetric(Edges.canonical(edges, srcCol, dstCol))
       .stageCheckpoint()
     var labels = both.groupBy(col("u"))
       .agg(least(min(col("v")), col("u")).as("comp"))
@@ -113,18 +91,15 @@ object ConnectedComponents {
     *
     * Fixpoint: the edge set is a forest of stars (v, min-of-component);
     * reading the labels off is one projection. Both operations preserve
-    * connectivity, so the result provably equals [[components]] — also
-    * asserted on randomized graphs in ConnectedComponentsSpec.
+    * connectivity, so the result provably equals [[components]].
+    * Deliberate library API, pinned by ConnectedComponentsSpec (also on
+    * randomized graphs).
     */
   def componentsStar(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30): DataFrame = {
-    val init = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = init.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct()
-      .stageCheckpoint()
+    val canon = Edges.canonical(edges, srcCol, dstCol)
+    var e = canon.filter(col("u") =!= col("v"))
+      .select(col("v").as("u"), col("u").as("v"))
     var converged = e.isEmpty
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -160,11 +135,7 @@ object ConnectedComponents {
     // Everything else (star roots, and nodes whose only edges were
     // self-loops) labels itself — matching [[components]]' node universe.
     val members = e.select(col("u").as("node"), col("v").as("comp"))
-    val allNodes = edges
-      .select(col(srcCol).cast("long").as("node"))
-      .union(edges.select(col(dstCol).cast("long").as("node")))
-      .distinct()
-    val selfLabeled = allNodes
+    val selfLabeled = Edges.nodes(canon)
       .join(members.select(col("node")), Seq("node"), "left_anti")
       .select(col("node"), col("node").as("comp"))
     members.union(selfLabeled)

@@ -18,54 +18,36 @@ import graft.ops.Checkpoints.StageCheckpoint
   */
 object HyperBall {
 
-  /** Canonical symmetric edge view plus the node universe. The casts
-    * run BEFORE least/greatest — string ids order lexicographically
-    * ("9" > "10") and the u < v filter would drop those edges. The
-    * node universe comes from the RAW edges: a node whose only
-    * incident edge is a self-loop has no sym row (u < v drops it) but
-    * still owns the ball {self} — dropping it would emit no row where
-    * a BFS oracle reports size 1.
+  /** Symmetric edge view (lazy) plus the node universe, both off one
+    * [[Edges.canonical]] checkpoint. The node universe comes from the
+    * canonical frame WITH its self-loops: a node whose only incident
+    * edge is a self-loop has no sym row (u < v drops it) but still owns
+    * the ball {self} — dropping it would emit no row where a BFS oracle
+    * reports size 1.
     *
-    * The projected RAW edge list is materialized FIRST: sym, nodes and
-    * the callers' per-round actions all hang off it, and without the
-    * checkpoint each action re-plans the caller's whole edge-BUILDING
-    * subplan (r15 stage attribution on the co-purchase graph: the
+    * The checkpoint is what keeps the caller's edge-BUILDING subplan to
+    * one evaluation: sym, nodes and the callers' per-round actions all
+    * hang off it (r15 stage attribution on the co-purchase graph: the
     * 898k-row pair-explode stage ran 3× per diameter query / 2× per
-    * radius-2 query — 40%/25% of the queries' cpu — for a frame that
-    * is 14.6k rows once built). The edge list is the small product of
-    * a big build by construction; one O(E) checkpoint is the cheap end
-    * of that asymmetry.
+    * radius-2 query — 40%/25% of the queries' cpu — for a frame that is
+    * 14.6k rows once built).
     *
-    * `stageSym` additionally materializes the symmetric edge frame —
-    * worth it only when ≥2 merge ROUNDS re-consume it ([[ballSizes3]]);
-    * the radius-2 path measured ~1 s/sf0.1 SLOWER with the eager sym
-    * checkpoint than with Spark's own exchange reuse, so
-    * [[twoHopBallSizes]] keeps sym lazy over the edge checkpoint.
+    * Staging sym as well is worth it only when ≥2 merge ROUNDS re-consume
+    * it ([[ballSizes3]], [[neighborhoodFunction]]); the radius-2 path
+    * measured ~1 s/sf0.1 SLOWER with the eager sym checkpoint than with
+    * Spark's own exchange reuse, so [[twoHopBallSizes]] keeps it lazy.
     */
   private def symAndNodes(edges: DataFrame, srcCol: String,
-      dstCol: String, stageSym: Boolean): (DataFrame, DataFrame) = {
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .stageCheckpoint()
-    val canon = e0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") < col("v"))
-      .distinct()
-    val symLazy = canon.unionByName(
-      canon.select(col("v").as("u"), col("u").as("v")))
-    val sym = if (stageSym) symLazy.stageCheckpoint() else symLazy
-    val nodes = e0.select(col("u"))
-      .unionByName(e0.select(col("v").as("u")))
-      .distinct()
-    (sym, nodes)
+      dstCol: String): (DataFrame, DataFrame) = {
+    val canon = Edges.canonical(edges, srcCol, dstCol)
+    (Edges.symmetric(canon.filter(col("u") < col("v"))), Edges.nodes(canon))
   }
 
   /** Radius-1 ball sketch per node: self + direct neighbors. */
   private def radius1(sym: DataFrame, nodes: DataFrame, k: Int): DataFrame =
     sym.select(col("u"), col("v").cast("string").as("m"))
-      .unionByName(nodes.select(col("u"), col("u").cast("string").as("m")))
+      .unionByName(nodes.select(col("node").as("u"),
+        col("node").cast("string").as("m")))
       .groupBy(col("u"))
       .agg(graft.functions.KmvAgg.sketchMd5(col("m"), k).as("sk"))
 
@@ -109,7 +91,7 @@ object HyperBall {
     */
   def twoHopBallSizes(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int = 256): DataFrame = {
-    val (sym, nodes) = symAndNodes(edges, srcCol, dstCol, stageSym = false)
+    val (sym, nodes) = symAndNodes(edges, srcCol, dstCol)
     val h1 = radius1(sym, nodes, k)
     val h2 = nextRadius(sym, h1, k)
     h2.select(col("u").as("node"), size(col("sk")).as("sketch_size"),
@@ -128,7 +110,8 @@ object HyperBall {
     */
   def ballSizes3(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int = 256): DataFrame = {
-    val (sym, nodes) = symAndNodes(edges, srcCol, dstCol, stageSym = true)
+    val (symLazy, nodes) = symAndNodes(edges, srcCol, dstCol)
+    val sym = symLazy.stageCheckpoint()
     val h1 = radius1(sym, nodes, k).stageCheckpoint()
     val h2 = nextRadius(sym, h1, k).stageCheckpoint()
     val h3 = nextRadius(sym, h2, k)
@@ -162,7 +145,8 @@ object HyperBall {
       k: Int = 256, maxR: Int = 8): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (sym, nodes) = symAndNodes(edges, srcCol, dstCol, stageSym = true)
+    val (symLazy, nodes) = symAndNodes(edges, srcCol, dstCol)
+    val sym = symLazy.stageCheckpoint()
     val n0 = nodes.count()
     if (n0 == 0L)
       return Seq.empty[(Long, Long, Long)]

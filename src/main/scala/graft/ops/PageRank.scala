@@ -30,41 +30,9 @@ import graft.ops.Checkpoints.StageCheckpoint
   * decode (persist) and the 32-thread broadcast-probe profile cost more
   * cpu than the per-round edge exchange they remove at every config
   * measured, so the checkpoint-per-round SMJ loop stays. What DID
-  * measure is the build below.
+  * measure is the canonical edge build ([[Edges]]).
   */
 object PageRank {
-
-  /** Symmetric edge frame by CANONICAL dedup (r15, guide §2.3): the
-    * input deduplicates on (least, greatest) — half the rows of the
-    * former symmetrize-then-distinct (which shuffled and double-
-    * aggregated BOTH orientations) — and the swapped union then re-adds
-    * each non-self-loop edge's other orientation without introducing
-    * duplicates. The produced SET is identical for every input class
-    * (duplicates, both orientations present, self-loops — a self-loop
-    * survives exactly once, as before). Measured sf1.0/16t: build
-    * 171 → 114 shuffle-MB, ~53 → ~25 cpu-s.
-    */
-  private def symmetric(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val sym0 = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-    // canon is checkpointed BEFORE the swapped union (r15 session 2):
-    // with a lazy canon the union's two branches each re-ran the
-    // canonical distinct agg inside the sym checkpoint action —
-    // exchange reuse dedups the shuffle write, not the final-agg pass
-    // above it (same finding as the lpa/bfs sym builders, −5.2
-    // shuffle-read MB there). The union over canon's blocks is two
-    // cheap scans.
-    val canon = sym0
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .stageCheckpoint()
-    canon.filter(col("u") =!= col("v"))
-      .select(col("v").as("u"), col("u").as("v"))
-      .union(canon)
-      .stageCheckpoint()
-  }
 
   /** Personalized PageRank: the restart mass returns to the SEED set
     * instead of spreading uniformly — rank⁰(v) = s(v), rankᵏ⁺¹(v) =
@@ -78,7 +46,8 @@ object PageRank {
     */
   def personalizedRanks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val sym = symmetric(edges, srcCol, dstCol)
+    val sym = Edges.symmetric(Edges.canonical(edges, srcCol, dstCol))
+      .stageCheckpoint()
     // staged: deg is re-joined EVERY iteration — unstaged, each round's
     // checkpoint would re-run the full edge-list aggregation
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -104,7 +73,8 @@ object PageRank {
 
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val sym = symmetric(edges, srcCol, dstCol)
+    val sym = Edges.symmetric(Edges.canonical(edges, srcCol, dstCol))
+      .stageCheckpoint()
     // staged for the same per-iteration reuse as in personalizedRanks
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
       .stageCheckpoint()

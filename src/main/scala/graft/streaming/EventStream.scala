@@ -120,6 +120,7 @@ object EventStream {
     * the batch `stream_sliding_30m` query. Each event contributes to two
     * open windows; the watermark closes a window 2 hours after its end,
     * so state holds ≤ (2h+30m)/15m ≈ 10 windows per event_type.
+    * Deliberate library API, pinned by EventStreamSpec.
     */
   def slidingCounts(events: DataFrame): DataFrame =
     events
@@ -135,6 +136,7 @@ object EventStream {
     * merging-session state, the watermark emits a session once no event
     * can extend it. Use this when per-session aggregates suffice;
     * [[sessionize]] remains for custom state (e.g. mid-session updates).
+    * Deliberate library API, pinned by EventStreamSpec.
     */
   def sessionWindowCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
     events
@@ -190,6 +192,7 @@ object EventStream {
     * condition); the only extra cost is buffering each unmatched
     * purchase until the watermark passes its window, after which it
     * emits exactly once with nulls.
+    * Deliberate library API, pinned by EventStreamSpec.
     */
   def clickAttributionOuter(purchases: DataFrame,
       clicks: DataFrame): DataFrame = {
@@ -225,7 +228,7 @@ object EventStream {
 
   /** End-to-end wiring helper: file-source stream of events parquet →
     * hourly counts → sink. The run loop the driver of a real deployment
-    * owns; tests use MemoryStream instead.
+    * owns. Deliberate library API, pinned by FileStreamSpec.
     */
   def runFileStream(spark: SparkSession, srcDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {

@@ -12,8 +12,7 @@ class GraphQueriesSpec extends SparkSpec {
 
   private def lpa2(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    val sym = edges.toDF("u", "v")
-      .unionByName(edges.map(_.swap).toDF("u", "v"))
+    val sym = graft.ops.Edges.symmetric(edges.toDF("u", "v"))
       .localCheckpoint()
     GraphQueries.lpa(sym, iters = 2).as[(Long, Long)].collect().toMap
   }
@@ -42,8 +41,7 @@ class GraphQueriesSpec extends SparkSpec {
 
   private def peel(edges: Seq[(Long, Long)], k: Int, rounds: Int) = {
     import spark.implicits._
-    val sym = edges.toDF("u", "v")
-      .unionByName(edges.map(_.swap).toDF("u", "v"))
+    val sym = graft.ops.Edges.symmetric(edges.toDF("u", "v"))
     GraphQueries.kcorePeel(sym, k, rounds)
       .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
   }

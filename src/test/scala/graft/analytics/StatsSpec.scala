@@ -85,21 +85,41 @@ class StatsSpec extends SparkSpec {
     assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 9L -> 1L))
   }
 
-  test("HyperBall evaluates the caller's edge build once per query") {
-    // r15: symAndNodes stage-checkpoints the projected input edge list,
-    // so the (potentially expensive) edge-BUILDING subplan upstream is
-    // evaluated exactly once no matter how many actions the sketch
-    // rounds run (pre-fix: the nodes derivation + per-round checkpoints
-    // re-planned it 2-3x per query — 25-40% of the hyperball queries'
-    // cpu at sf0.1)
-    val evals = spark.sparkContext.longAccumulator("edgeEvals")
-    val tick = udf((x: Long) => { evals.add(1L); x })
-    val edges = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)))
-      .select(tick(col("a")).as("a"), col("b"))
-    graft.ops.HyperBall
-      .neighborhoodFunction(edges, "a", "b", k = 16, maxR = 8)
-      .collect()
-    assert(evals.value === 4L)
+  test("every graph operator evaluates the caller's edge build once per query") {
+    // each operator stages its canonical edge list (ops.Edges.canonical)
+    // before any other consumer reads it, so the (potentially expensive)
+    // edge-BUILDING subplan upstream is evaluated exactly once no matter
+    // how many actions the loop rounds run (r15: the HyperBall nodes
+    // derivation + per-round checkpoints re-planned it 2-3x per query —
+    // 25-40% of the hyperball queries' cpu at sf0.1)
+    import graft.ops._
+    import spark.implicits._
+    val seeds = Seq(1L).toDF("node")
+    val ops = Seq[(String, (org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame))](
+      "PageRank.ranks" -> (PageRank.ranks(_, "a", "b")),
+      "PageRank.personalizedRanks" ->
+        (PageRank.personalizedRanks(_, "a", "b", seeds)),
+      "ConnectedComponents.components" ->
+        (ConnectedComponents.components(_, "a", "b")),
+      "ConnectedComponents.componentsStar" ->
+        (ConnectedComponents.componentsStar(_, "a", "b")),
+      "Triangles.census" -> (Triangles.census(_, "a", "b")),
+      "Triangles.perNode" -> (Triangles.perNode(_, "a", "b")),
+      "HyperBall.twoHopBallSizes" ->
+        (HyperBall.twoHopBallSizes(_, "a", "b", k = 16)),
+      "HyperBall.ballSizes3" -> (HyperBall.ballSizes3(_, "a", "b", k = 16)),
+      "HyperBall.neighborhoodFunction" ->
+        (HyperBall.neighborhoodFunction(_, "a", "b", k = 16, maxR = 8)))
+    val evals = ops.map { case (name, op) =>
+      val acc = spark.sparkContext.longAccumulator(s"edgeEvals:$name")
+      val tick = udf((x: Long) => { acc.add(1L); x })
+      val edges = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)))
+        .select(tick(col("a")).as("a"), col("b"))
+      op(edges).collect()
+      name -> acc.value.longValue
+    }
+    assert(evals.filter(_._2 != 4L) === Seq.empty, evals)
   }
 
   test("HyperBall.neighborhoodFunction == brute BFS + estimator, both regimes") {

@@ -11,7 +11,7 @@ class BfsSpec extends SparkSpec {
   import spark.implicits._
 
   private def sym(edges: Seq[(Long, Long)]) =
-    (edges ++ edges.map(_.swap)).toDF("u", "v")
+    Edges.symmetric(edges.toDF("u", "v"))
 
   test("path graph: dist equals hop count, bounded by rounds") {
     // 1-2-3-4-5 path; source 1; rounds 3 → node 5 unreached
