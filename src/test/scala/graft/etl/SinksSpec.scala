@@ -1,10 +1,15 @@
 package graft.etl
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.graftshim.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** K1/K2 sink drives (SURVEY §2.2): parquet overwrite of all four tables
-  * and reason-filtered CSV export, read back and checked.
+  * (concurrent: failure and local-property semantics pinned here) and
+  * reason-filtered CSV export, read back and checked.
   */
 class SinksSpec extends SparkSpec {
 
@@ -19,6 +24,48 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/logs").count() === 12)
     // round-trip fidelity: schema + values survive the sink
     assert(spark.read.parquet(s"$out/logs").columns.toSeq === QualityLog.columns)
+  }
+
+  test("K1: a failed write throws only after the other three have finished") {
+    val out = java.nio.file.Files.createTempDirectory("graft-sink-fail").toString
+    val r = EtlPipeline.runDefault(spark)
+    val bad = r.copy(diagnoses = r.diagnoses.withColumn("boom", raise_error(lit("boom"))))
+    val e = intercept[Exception](Sinks.overwriteParquet(bad, out))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    // the status store is fed by the listener bus: drain it so a job that
+    // has ended is not still listed as running
+    ListenerDrain.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.read.parquet(s"$out/patients").count() === 11)
+    assert(spark.read.parquet(s"$out/encounters").count() === 8)
+    assert(spark.read.parquet(s"$out/logs").count() === 12)
+  }
+
+  test("K1: every job of the concurrent load carries the caller's local properties") {
+    val sc = spark.sparkContext
+    val out = java.nio.file.Files.createTempDirectory("graft-sink-props").toString
+    val result = EtlPipeline.runDefault(spark)
+    // a load without the property first: threads kept from it would
+    // carry no scope into the load below
+    Sinks.overwriteParquet(result, out)
+    ListenerDrain.drain(sc)
+    val scopes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        scopes.add(String.valueOf(e.properties.getProperty("graft.test.scope")))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.scope", "k1")
+    try {
+      Sinks.overwriteParquet(result, out)
+      ListenerDrain.drain(sc)
+      val seen = scopes.asScala.toSeq
+      assert(seen.size >= 4, seen)
+      assert(seen.forall(_ == "k1"), seen)
+    } finally {
+      sc.setLocalProperty("graft.test.scope", null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("partitioned corpus sink: hive layout prunes at listing level") {
