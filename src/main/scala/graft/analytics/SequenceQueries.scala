@@ -300,11 +300,12 @@ object SequenceQueries extends QueryPack {
 
   /** Clamped running balance per user — the NONLINEAR recurrence
     * (`bal' = max(0, bal + delta)`) that no window frame can express,
-    * implemented in [[graft.ops.StatefulScan]] as the secondary-sort +
-    * single-pass `mapPartitions` idiom. The oracle replays the exact
-    * trajectory as a DuckDB recursive CTE stepping per-user row numbers
-    * — a full independent reimplementation, in integer centi-units on
-    * both sides so the compare is bit-exact.
+    * implemented in [[graft.ops.StatefulScan]] as a per-user fold on
+    * Spark's sorted-group API (`flatMapSortedGroups`: one user shuffle,
+    * then each user's events in (ts, event_id) order). The oracle
+    * replays the exact trajectory as a DuckDB recursive CTE stepping
+    * per-user row numbers — a full independent reimplementation, in
+    * integer centi-units on both sides so the compare is bit-exact.
     */
   private val cappedBalance = Q(
     "seq_capped_running_balance",
@@ -338,10 +339,11 @@ object SequenceQueries extends QueryPack {
   /** Integer EWMA smoothing + online anomaly deviation per user
     * ([[graft.ops.StatefulScan.ewmaSmooth]]) — the second member of the
     * nonlinear-recurrence family beside the clamped balance: truncating
-    * integer α=1/4 smoothing, max |x − forecast| as the anomaly signal.
-    * The oracle replays the exact trajectory as a DuckDB recursive CTE
-    * in the same integer centi-units; `trunc((x−e)/4.0)` over exact FP
-    * quarters equals Scala's truncating Long division step for step.
+    * integer α=1/4 smoothing, max |x − forecast| as the anomaly signal,
+    * run as the same per-user sorted-group fold. The oracle replays the
+    * exact trajectory as a DuckDB recursive CTE in the same integer
+    * centi-units; `trunc((x−e)/4.0)` over exact FP quarters equals
+    * Scala's truncating Long division step for step.
     */
   private val ewma = Q(
     "seq_ewma_anomaly",
@@ -371,11 +373,12 @@ object SequenceQueries extends QueryPack {
     * ([[graft.ops.StatefulScan.holtSmooth]]) — the third nonlinear
     * recurrence, and the first with TWO coupled state registers (level +
     * trend): no window frame, and no single prefix-scan, can carry both.
-    * Truncating integer α=1/2 / β=1/4 updates; the oracle replays the
-    * exact two-register trajectory as a recursive CTE, mirroring each
-    * truncating Long division with `trunc(x / k.0)` — including the
-    * two-step trend truncation, which is replayed literally rather than
-    * algebraically collapsed.
+    * Truncating integer α=1/2 / β=1/4 updates, run as the same per-user
+    * sorted-group fold; the oracle replays the exact two-register
+    * trajectory as a recursive CTE, mirroring each truncating Long
+    * division with `trunc(x / k.0)` — including the two-step trend
+    * truncation, which is replayed literally rather than algebraically
+    * collapsed.
     */
   private val holt = Q(
     "seq_holt_linear",

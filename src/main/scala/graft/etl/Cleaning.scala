@@ -50,29 +50,19 @@ object Cleaning {
 
   // ---------------------------------------------------------------- P4
   /** `weight_to_kg` (ref `etl.py:220-308`): mixed-format weight → kg with
-    * BMI-based unit inference and post-hoc plausibility repair. Returns a
-    * STRUCT (weight_kg, flagged, reason) — the reference's multi-return —
-    * derived in ONE expression tree so the log reason can never drift
-    * from the cleaned value (SURVEY §7 hard part (e)).
-    */
-  def weightToKg(weight: Column, heightCm: Column): Column = {
-    val s = lower(wsTrim(weight.cast("string")))
-    val num = regexp_extract(s, "[\\d.]+", 0).try_cast("double")
-    val h2 = pow(heightCm / 100.0, 2) // m²
-    val w0 = weightW0(s, num, heightCm, h2)
-    weightStruct(weight, heightCm, s, num, h2, w0, w0 / h2)
-  }
-
-  /** [[weightToKg]] for hot paths: the shared subtrees (normalized
-    * string, extracted number, height², resolved weight, BMI) are
-    * PRE-PROJECTED as named columns across separate selects, so each
-    * `when` branch of the struct binds attribute references instead of
-    * inlining the whole regex chain. The fully-inlined form blows
-    * janino's 64KB method limit (observed: `WholeStageCodegen disabled
-    * … janino`) and the one operator touching every row runs
-    * interpreted. CollapseProject keeps the split (the intermediates
-    * are non-cheap and multiply-referenced, which is exactly its
-    * no-collapse condition).
+    * BMI-based unit inference and post-hoc plausibility repair. Adds
+    * column `out` as a STRUCT (weight_kg, flagged, reason) — the
+    * reference's multi-return — derived in ONE expression tree so the log
+    * reason can never drift from the cleaned value (SURVEY §7 hard part
+    * (e)). The shared subtrees (normalized string, extracted number,
+    * height², resolved weight, BMI) are PRE-PROJECTED as named columns
+    * across separate selects, so each `when` branch of the struct binds
+    * attribute references instead of inlining the whole regex chain. The
+    * fully-inlined form blows janino's 64KB method limit (observed:
+    * `WholeStageCodegen disabled … janino`) and the one operator touching
+    * every row runs interpreted. CollapseProject keeps the split (the
+    * intermediates are non-cheap and multiply-referenced, which is
+    * exactly its no-collapse condition).
     */
   def withWeightKg(df: org.apache.spark.sql.DataFrame, weight: Column,
       heightCm: Column, out: String): org.apache.spark.sql.DataFrame = {

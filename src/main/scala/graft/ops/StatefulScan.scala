@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-key ordered scans with NONLINEAR state — the recurrence class
@@ -8,11 +10,12 @@ import org.apache.spark.sql.functions._
   * a clamped running balance depends on every prior clamp, so unlike a
   * plain cumulative sum it cannot be rewritten as an aggregate over a
   * frame. This is the one operator family where dropping below the
-  * DataFrame algebra is the *right* call, and the implementation is the
-  * scalable idiom for it: hash-repartition by key, sort WITHIN each
-  * partition by (key, time, id) — Spark's secondary-sort, one shuffle,
-  * no global ordering — then a single `mapPartitions` pass holding O(1)
-  * state per key with key-change detection. At 100 TB the cost is one
+  * DataFrame algebra is the *right* call, and the implementation is
+  * Spark's sorted-group fold: `groupBy(user).as[..].flatMapSortedGroups(
+  * ts, event_id)` hash-partitions by user (one shuffle, no global
+  * ordering), sorts each partition by (user, ts, event_id) — the
+  * secondary sort — and hands each user's time-ordered values to a
+  * plain Scala fold holding O(1) state. At 100 TB the cost is one
   * shuffle of the fact table and a streaming scan per partition; skew
   * is bounded by the largest single key's row count, same as any
   * keyed aggregation.
@@ -22,56 +25,43 @@ import org.apache.spark.sql.functions._
   */
 object StatefulScan {
 
+  /** The shared prep: skip null `value` rows (no delta, no observation —
+    * a null would otherwise crash the non-nullable tuple decode), then
+    * run `fold` once per user over that user's `x` values in
+    * (ts, event_id) order. `fold` gets the user id and a non-empty
+    * iterator and returns the user's one output row, named `names`.
+    */
+  private def perUserFold[T <: Product : TypeTag](events: DataFrame,
+      x: Column, names: String*)(fold: (Long, Iterator[Long]) => T): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.filter(col("value").isNotNull)
+      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
+        col("event_id"), x.as("x"))
+      .groupBy(col("user_id")).as[Long, (Long, Long, Long, Long)]
+      .flatMapSortedGroups(col("us"), col("event_id")) { (u, rows) =>
+        Iterator.single(fold(u, rows.map(_._4)))
+      }.toDF(names: _*)
+  }
+
+  private val cents = round(col("value") * 100).cast("long")
+
   /** (user, final/peak balance, floor-hit count) after replaying the
     * user's events in (ts, event_id) order: credits add `round(value *
     * 100)` cents, debits (the purchase type) subtract it, and the
     * balance clamps at zero — every clamp counts as a floor hit.
     */
   def cappedBalance(events: DataFrame, debitType: String = "purchase"): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val delta = (round(col("value") * 100).cast("long") *
-      when(col("event_type") === debitType, lit(-1L)).otherwise(lit(1L)))
-    val prepared: Dataset[(Long, Long, Long, Long)] = events
-      // null value = no delta: same skip rule as ewma/holt (a null would
-      // otherwise crash the non-nullable tuple decode)
-      .filter(col("value").isNotNull)
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-        col("event_id"), delta.as("delta_c"))
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("us"), col("event_id"))
-      .as[(Long, Long, Long, Long)]
-    prepared.mapPartitions { rows =>
-      // one (user, bal, peak, hits) register; emit on key change / end.
-      // The iterator arrives user-contiguous and time-ordered by the
-      // sortWithinPartitions above, so this is a single forward pass.
-      new Iterator[(Long, Long, Long, Long)] {
-        private var pending: Option[(Long, Long, Long, Long)] = None
-        private var cur = Option.empty[Long]
-        private var bal, peak, hits = 0L
-        private def roll(): Unit = {
-          while (pending.isEmpty && rows.hasNext) {
-            val (u, _, _, d) = rows.next()
-            if (cur.exists(_ != u)) {
-              pending = Some((cur.get, bal, peak, hits))
-              bal = 0L; peak = 0L; hits = 0L
-            }
-            cur = Some(u)
-            val raw = bal + d
-            if (raw < 0L) { bal = 0L; hits += 1 } else bal = raw
-            if (bal > peak) peak = bal
-          }
-          if (pending.isEmpty && rows.isEmpty && cur.nonEmpty) {
-            pending = Some((cur.get, bal, peak, hits))
-            cur = None
-          }
-        }
-        override def hasNext: Boolean = { roll(); pending.nonEmpty }
-        override def next(): (Long, Long, Long, Long) = {
-          roll(); val r = pending.get; pending = None; r
-        }
+    val delta = cents * when(col("event_type") === debitType, lit(-1L)).otherwise(lit(1L))
+    perUserFold(events, delta,
+        "user_id", "final_balance_c", "peak_balance_c", "floor_hits") { (u, deltas) =>
+      var bal, peak, hits = 0L
+      deltas.foreach { d =>
+        if (bal + d < 0L) { bal = 0L; hits += 1 } else bal += d
+        peak = math.max(peak, bal)
       }
-    }.toDF("user_id", "final_balance_c", "peak_balance_c", "floor_hits")
+      (u, bal, peak, hits)
+    }
   }
 
   /** Registered-query wrapper: deterministic user order. */
@@ -88,48 +78,16 @@ object StatefulScan {
     * The deviation |x − e_prev| is the online anomaly signal (how far
     * each event sat from its forecast).
     */
-  def ewmaSmooth(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val prepared: Dataset[(Long, Long, Long, Long)] = events
-      .filter(col("value").isNotNull)
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-        col("event_id"), round(col("value") * 100).cast("long").as("x"))
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("us"), col("event_id"))
-      .as[(Long, Long, Long, Long)]
-    prepared.mapPartitions { rows =>
-      new Iterator[(Long, Long, Long, Long)] {
-        private var pending: Option[(Long, Long, Long, Long)] = None
-        private var cur = Option.empty[Long]
-        private var e, maxDev, n = 0L
-        private def roll(): Unit = {
-          while (pending.isEmpty && rows.hasNext) {
-            val (u, _, _, x) = rows.next()
-            if (cur.exists(_ != u)) {
-              pending = Some((cur.get, e, maxDev, n))
-              e = 0L; maxDev = 0L; n = 0L
-            }
-            if (cur.isEmpty || cur.get != u) { cur = Some(u); e = x; n = 1L }
-            else {
-              val dev = math.abs(x - e)
-              if (dev > maxDev) maxDev = dev
-              e = e + (x - e) / 4
-              n += 1
-            }
-          }
-          if (pending.isEmpty && rows.isEmpty && cur.nonEmpty) {
-            pending = Some((cur.get, e, maxDev, n))
-            cur = None
-          }
-        }
-        override def hasNext: Boolean = { roll(); pending.nonEmpty }
-        override def next(): (Long, Long, Long, Long) = {
-          roll(); val r = pending.get; pending = None; r
-        }
+  def ewmaSmooth(events: DataFrame): DataFrame =
+    perUserFold(events, cents, "user_id", "ewma_c", "max_dev_c", "n_events") { (u, xs) =>
+      var e = xs.next(); var maxDev = 0L; var n = 1L
+      xs.foreach { x =>
+        maxDev = math.max(maxDev, math.abs(x - e))
+        e += (x - e) / 4
+        n += 1
       }
-    }.toDF("user_id", "ewma_c", "max_dev_c", "n_events")
-  }
+      (u, e, maxDev, n)
+    }
 
   def ewmaQuery(s: SparkSession, dir: String): DataFrame =
     ewmaSmooth(graft.Tables.events(s, dir)).orderBy(col("user_id"))
@@ -148,56 +106,22 @@ object StatefulScan {
     *
     * Init: l₁ = x₁, b₁ = 0. Emits per user: final level, final trend,
     * next-step forecast l+b, max |forecast error|, event count. Same
-    * secondary-sort single-pass shape as [[cappedBalance]]: repartition
-    * by user, sortWithinPartitions by (user, ts, event_id), O(1) state
-    * per key.
+    * sorted-group fold as [[cappedBalance]].
     */
-  def holtSmooth(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val prepared: Dataset[(Long, Long, Long, Long)] = events
-      .filter(col("value").isNotNull)
-      .select(col("user_id"), expr("unix_micros(ts)").as("us"),
-        col("event_id"), round(col("value") * 100).cast("long").as("x"))
-      .repartition(col("user_id"))
-      .sortWithinPartitions(col("user_id"), col("us"), col("event_id"))
-      .as[(Long, Long, Long, Long)]
-    prepared.mapPartitions { rows =>
-      new Iterator[(Long, Long, Long, Long, Long)] {
-        private var pending: Option[(Long, Long, Long, Long, Long)] = None
-        private var cur = Option.empty[Long]
-        private var l, b, maxErr, n = 0L
-        private def roll(): Unit = {
-          while (pending.isEmpty && rows.hasNext) {
-            val (u, _, _, x) = rows.next()
-            if (cur.exists(_ != u)) {
-              pending = Some((cur.get, l, b, maxErr, n))
-              l = 0L; b = 0L; maxErr = 0L; n = 0L
-            }
-            if (cur.isEmpty || cur.get != u) { cur = Some(u); l = x; n = 1L }
-            else {
-              val f = l + b
-              val err = math.abs(x - f)
-              if (err > maxErr) maxErr = err
-              val l1 = f + (x - f) / 2
-              b = b + (l1 - l - b) / 4
-              l = l1
-              n += 1
-            }
-          }
-          if (pending.isEmpty && rows.isEmpty && cur.nonEmpty) {
-            pending = Some((cur.get, l, b, maxErr, n))
-            cur = None
-          }
-        }
-        override def hasNext: Boolean = { roll(); pending.nonEmpty }
-        override def next(): (Long, Long, Long, Long, Long) = {
-          roll(); val r = pending.get; pending = None; r
-        }
+  def holtSmooth(events: DataFrame): DataFrame =
+    perUserFold(events, cents,
+        "user_id", "level_c", "trend_c", "max_err_c", "n_events") { (u, xs) =>
+      var l = xs.next(); var b, maxErr = 0L; var n = 1L
+      xs.foreach { x =>
+        val f = l + b
+        maxErr = math.max(maxErr, math.abs(x - f))
+        val l1 = f + (x - f) / 2
+        b += (l1 - l - b) / 4
+        l = l1
+        n += 1
       }
-    }.toDF("user_id", "level_c", "trend_c", "max_err_c", "n_events")
-      .withColumn("forecast_c", col("level_c") + col("trend_c"))
-  }
+      (u, l, b, maxErr, n)
+    }.withColumn("forecast_c", col("level_c") + col("trend_c"))
 
   def holtQuery(s: SparkSession, dir: String): DataFrame =
     holtSmooth(graft.Tables.events(s, dir)).orderBy(col("user_id"))

@@ -69,44 +69,23 @@ object EventStream {
 
     def update(userId: Long, rows: Iterator[Event],
         state: GroupState[(Int, Long, Long)]): Iterator[SessionUpdate] = {
+      def emit(c: (Int, Long, Long), done: Boolean) =
+        SessionUpdate(userId, c._1, new Timestamp(c._2), new Timestamp(c._3), closed = done)
       if (state.hasTimedOut) {
-        val (n, start, end) = state.get
+        val c = state.get
         state.remove()
-        Iterator(SessionUpdate(userId, n, new Timestamp(start), new Timestamp(end), closed = true))
+        Iterator(emit(c, done = true))
       } else {
-        // Interval fold: the held session and the batch events, sorted by
-        // START time, merge when next.start − cur.end ≤ gap. This is the
-        // batch sessionizer's rule applied to the retained information:
-        // an out-of-order event INSIDE or within gap of the held session
-        // merges (and can extend its start backwards); one farther than
-        // gap BEFORE it forms its own earlier session — the old
-        // `t − end ≤ gap` test merged those (negative delta), silently
-        // fusing sessions the batch twin splits. (An event so late that
-        // its true session was already emitted in a prior batch still
-        // emits separately — append mode cannot retract; the watermark
-        // bounds how late that can happen.)
-        val items: Seq[(Int, Long, Long)] =
-          (state.getOption.toSeq ++
-            rows.map(e => (1, e.ts.getTime, e.ts.getTime)))
-            .sortBy(i => (i._2, i._3))
-        var out = List.empty[SessionUpdate]
-        var cur: Option[(Int, Long, Long)] = None
-        items.foreach { case (n1, s1, e1) =>
-          cur = cur match {
-            case Some((n, start, end)) if s1 - end <= gapMs =>
-              Some((n + n1, start, math.max(end, e1)))
-            case Some((n, start, end)) =>
-              out ::= SessionUpdate(userId, n, new Timestamp(start), new Timestamp(end), closed = true)
-              Some((n1, s1, e1))
-            case None => Some((n1, s1, e1))
-          }
+        // An event so late that its true session was already emitted in
+        // a prior batch still emits separately — append mode cannot
+        // retract; the watermark bounds how late that can happen.
+        val (closed, open) = SessionFold(
+          state.getOption.toSeq ++ rows.map(e => (1, e.ts.getTime, e.ts.getTime)),
+          gapMs)(_._2, _._3) { case ((n, start, end), (n1, _, e1)) =>
+          (n + n1, start, math.max(end, e1))
         }
-        cur.foreach { c =>
-          state.update(c)
-          state.setTimeoutTimestamp(c._3 + gapMs)
-          out ::= SessionUpdate(userId, c._1, new Timestamp(c._2), new Timestamp(c._3), closed = false)
-        }
-        out.reverseIterator
+        open.foreach { c => state.update(c); state.setTimeoutTimestamp(c._3 + gapMs) }
+        (closed.map(emit(_, done = true)) ++ open.map(emit(_, done = false))).iterator
       }
     }
 
@@ -437,9 +416,32 @@ object EventStream {
   }
 }
 
-/** State machine for [[EventStream.runningTotals]]: one (n, centi-sum)
-  * ValueState per user, updated in deterministic within-batch order.
-  */
+private[streaming] object SessionFold {
+
+  /** The interval fold both sessionizers share
+    * ([[EventStream.sessionize]] in ms, [[TimerSessionProcessor]] in µs;
+    * `gap` is in the items' unit): sort the held session and the batch's
+    * items by (start, end), merge an item into the current session when
+    * item.start − cur.end ≤ gap, otherwise close the current session and
+    * open a new one at the item. This is the batch sessionizer's rule
+    * applied to the retained information: an out-of-order item inside or
+    * within gap of the held session merges (and can lower its start); one
+    * farther than gap BEFORE it forms its own earlier session instead of
+    * silently fusing. `merge` must keep the later end. Returns the closed
+    * sessions in start order and the open last one (None only on empty
+    * input). A standalone object, so a task closure that calls it
+    * captures nothing.
+    */
+  def apply[S](items: Seq[S], gap: Long)(
+      start: S => Long, end: S => Long)(merge: (S, S) => S): (Vector[S], Option[S]) =
+    items.sortBy(i => (start(i), end(i)))
+      .foldLeft((Vector.empty[S], Option.empty[S])) {
+        case ((closed, Some(cur)), i) if start(i) - end(cur) <= gap =>
+          (closed, Some(merge(cur, i)))
+        case ((closed, cur), i) => (closed ++ cur, Some(i))
+      }
+}
+
 /** State machine for [[EventStream.timerSessions]]: one
   * (startUs, lastUs, n, centiSum) ValueState per user plus event-time
   * timers at last + 30 min.
@@ -464,34 +466,16 @@ class TimerSessionProcessor extends org.apache.spark.sql.streaming.StatefulProce
   override def handleInputRows(user: Long,
       rows: Iterator[EventStream.Event],
       timerValues: TimerValues): Iterator[EventStream.SessionOut] = {
-    // Same interval fold as [[EventStream.sessionize]]: the held session
-    // and the batch events sorted by START, merged when
-    // next.start − cur.end ≤ gap — an out-of-order event within gap of
-    // the held session extends it (including its START, which the old
-    // merge never min'd), one farther than gap before it emits as its
-    // own earlier session instead of silently fusing.
-    val sorted = rows.toArray.sortBy(e => (us(e), e.event_id))
-      .map(e => (us(e), us(e), 1L, math.round(e.value * 100)))
-    val held: Option[(Long, Long, Long, Long)] =
-      if (sess.exists()) Some(sess.get()) else None
-    val items = (held.toSeq ++ sorted).sortBy(i => (i._1, i._2))
-    val out = scala.collection.mutable.ArrayBuffer.empty[EventStream.SessionOut]
-    var cur: Option[(Long, Long, Long, Long)] = None
-    items.foreach { case (s1, e1, n1, c1) =>
-      cur = cur match {
-        case Some((st, last, n, s)) if s1 - last > GapMs * 1000 =>
-          out += EventStream.SessionOut(user, st, last, n, s, "gap")
-          Some((s1, e1, n1, c1))
-        case Some((st, last, n, s)) =>
-          Some((st, math.max(last, e1), n + n1, s + c1))
-        case None => Some((s1, e1, n1, c1))
-      }
+    val held = if (sess.exists()) Some(sess.get()) else None
+    val (closed, open) = SessionFold(
+      held.toSeq ++ rows.map(e => (us(e), us(e), 1L, math.round(e.value * 100))),
+      GapMs * 1000)(_._1, _._2) { case ((st, last, n, s), (_, e1, n1, c1)) =>
+      (st, math.max(last, e1), n + n1, s + c1)
     }
-    cur.foreach { c4 =>
-      sess.update(c4)
-      getHandle.registerTimer(c4._2 / 1000 + GapMs)
+    open.foreach { c => sess.update(c); getHandle.registerTimer(c._2 / 1000 + GapMs) }
+    closed.iterator.map { case (st, last, n, s) =>
+      EventStream.SessionOut(user, st, last, n, s, "gap")
     }
-    out.iterator
   }
 
   override def handleExpiredTimer(user: Long, timerValues: TimerValues,
@@ -506,6 +490,9 @@ class TimerSessionProcessor extends org.apache.spark.sql.streaming.StatefulProce
   }
 }
 
+/** State machine for [[EventStream.runningTotals]]: one (n, centi-sum)
+  * ValueState per user, updated in deterministic within-batch order.
+  */
 class RunningTotalsProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
     Long, EventStream.Event, EventStream.RunningTotal] {
   import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}

@@ -180,11 +180,12 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("cleaning expressions on whitespace-only and empty strings") {
-    val r = Seq("", "   ", "\t").toDF("s").select(
+    val r = Cleaning.withWeightKg(Seq("", "   ", "\t").toDF("s"),
+        col("s"), lit(170.0), "w").select(
       Cleaning.heightToCm(col("s")).as("h"),
       TextAnalysis.tokenCount(col("s")).as("tc"),
       TextAnalysis.alphaRatio(col("s")).as("ar"),
-      Cleaning.weightToKg(col("s"), lit(170.0)).getField("reason").as("wr"))
+      col("w.reason").as("wr"))
       .collect()
     r.foreach { row =>
       assert(row.isNullAt(0))

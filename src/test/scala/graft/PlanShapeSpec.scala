@@ -353,6 +353,17 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("nonlinear recurrences: one user_id shuffle feeds the sorted-group fold; no window") {
+    // each per-user fold shuffles the events once by user and sorts
+    // within partitions; a second user_id exchange would be a re-shuffle,
+    // and a Window operator a slide back to a frame formulation
+    Seq("seq_capped_running_balance", "seq_ewma_anomaly", "seq_holt_linear").foreach { q =>
+      val s = planString(SparkEntry.queries(q)(spark, sf))
+      assert("hashpartitioning\\(user_id".r.findAllIn(s).length === 1, s"$q\n$s")
+      assert("\\bWindow \\[".r.findFirstIn(s).isEmpty, s"$q\n$s")
+    }
+  }
+
   test("distribution drift: decile boundaries broadcast to both bucket passes") {
     val s = planString(SparkEntry.queries("dq_distribution_drift")(spark, sf))
     // the 1-row boundary frame must reach each half as a broadcast

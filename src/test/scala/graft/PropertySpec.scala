@@ -41,14 +41,14 @@ class PropertySpec extends SparkSpec {
     assert(bad.isEmpty, bad.take(5).mkString("\n"))
   }
 
-  test("weightToKg: kg identity and lb conversion (generated)") {
+  test("withWeightKg: kg identity and lb conversion (generated)") {
     val kgs = samples(Gen.chooseNum(30.0, 200.0), 150, 4L)
       .map(v => math.rint(v * 10) / 10)
     val cases = kgs.map(v => (s"$v kg", v)) ++
       kgs.map(v => (s"$v lb", v * 0.453592))
-    val df = cases.toDF("raw", "expected")
-      .withColumn("got",
-        Cleaning.weightToKg(col("raw"), lit(170.0)).getField("weight_kg"))
+    val df = Cleaning.withWeightKg(cases.toDF("raw", "expected"),
+        col("raw"), lit(170.0), "w")
+      .withColumn("got", col("w.weight_kg"))
     val bad = df.filter(col("got").isNull ||
       abs(col("got") - col("expected")) > 1e-9).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))

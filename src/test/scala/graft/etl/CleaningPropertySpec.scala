@@ -83,10 +83,10 @@ class CleaningPropertySpec extends SparkSpec {
   }
 
   test("P4: explicit kg never flagged when BMI plausible; lb constant exact") {
-    val rows = (50 to 200).toDF("v")
-      .select(col("v"),
-        Cleaning.weightToKg(concat(col("v"), lit(" kg")), lit(175.0)).as("kg"),
-        Cleaning.weightToKg(concat(col("v"), lit(" lb")), lit(175.0)).as("lb"))
+    val kg = Cleaning.withWeightKg((50 to 200).toDF("v"),
+      concat(col("v"), lit(" kg")), lit(175.0), "kg")
+    val rows = Cleaning.withWeightKg(kg,
+        concat(col("v"), lit(" lb")), lit(175.0), "lb")
       .select(col("v"), col("kg.weight_kg"), col("kg.reason"),
         col("lb.weight_kg"), col("lb.reason"))
       .collect()
@@ -106,8 +106,8 @@ class CleaningPropertySpec extends SparkSpec {
   }
 
   test("P4: missing markers always flagged with null weight") {
-    val rows = Seq("", "na", "N/A", "none", "NULL", "-").toDF("w")
-      .select(Cleaning.weightToKg(col("w"), lit(170.0)).as("s"))
+    val rows = Cleaning.withWeightKg(
+        Seq("", "na", "N/A", "none", "NULL", "-").toDF("w"), col("w"), lit(170.0), "s")
       .select(col("s.weight_kg"), col("s.reason")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0))
@@ -167,11 +167,11 @@ class CleaningPropertySpec extends SparkSpec {
   test("parsers are total: garbage inputs yield null, never throw") {
     val junk = Seq("x9", "...", "ft in", "kg", "12-34-56-78", "m", "'\"",
       "1.2.3.4", "99999999999999999999", "∞", "NaN", "-0")
-    val rows = junk.toDF("s").select(
+    val rows = Cleaning.withWeightKg(junk.toDF("s"), col("s"), lit(170.0), "w").select(
       Cleaning.heightToCm(col("s")).as("h"),
       Cleaning.parseDate(col("s")).as("d"),
       Cleaning.sexToIso(col("s")).as("x"),
-      Cleaning.weightToKg(col("s"), lit(170.0)).getField("reason").as("r"))
+      col("w.reason").as("r"))
       .collect()
     assert(rows.length === junk.length) // no exceptions surfaced
     rows.foreach(r => assert(Set(0, 1, 2, 9).contains(r.getInt(2))))

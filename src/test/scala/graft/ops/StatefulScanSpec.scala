@@ -5,7 +5,7 @@ import graft.SparkSpec
 /** Planted-trajectory semantics for the clamped-balance stateful scan —
   * the registered query's recursive-CTE oracle proves cross-engine
   * agreement on real data; this pins the recurrence itself (clamping,
-  * floor-hit counting, key-change emission) on hand-computable inputs.
+  * floor-hit counting, per-user state) on hand-computable inputs.
   */
 class StatefulScanSpec extends SparkSpec {
 
@@ -79,11 +79,38 @@ class StatefulScanSpec extends SparkSpec {
     assert(r === ((1L, 1063L, -15L, 1125L, 3L, 1048L)))
   }
 
+  test("ewmaSmooth: first event seeds e, steps truncate toward zero, deviation is pre-update") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // user 1, cents 1000 → 950 → 1100:
+    //   init e=1000 n=1 max_dev=0
+    //   x=950:  dev=|950-1000|=50; e=1000+(-50)/4=1000-12=988 (trunc, not -13)
+    //   x=1100: dev=|1100-988|=112 (pre-update; post-update would be 84);
+    //           e=988+112/4=1016
+    // user 2, interleaved in time with user 1: 300 → 350, e=300+50/4=312
+    // user 3, one event: e = x, n = 1, max_dev 0
+    val df = Seq(
+      (1L, "2024-01-01 00:00:00", 1L, "view", 10.0),
+      (2L, "2024-01-01 00:00:30", 2L, "view", 3.0),
+      (3L, "2024-01-01 00:01:00", 1L, "view", 9.5),
+      (4L, "2024-01-01 00:01:30", 2L, "view", 3.5),
+      (5L, "2024-01-01 00:02:00", 1L, "view", 11.0),
+      (6L, "2024-01-01 00:02:30", 3L, "view", 7.0))
+      .toDF("event_id", "ts_s", "user_id", "event_type", "value")
+      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+    val got = StatefulScan.ewmaSmooth(df)
+      .select("user_id", "ewma_c", "max_dev_c", "n_events")
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
+    assert(got.toSeq ===
+      Seq((1L, 1016L, 112L, 3L), (2L, 312L, 50L, 2L), (3L, 700L, 0L, 1L)))
+  }
+
   test("ties on ts break by event_id; users never bleed state into each other") {
     // 40 users interleaved in input order, each: +200 then -300 (same ts,
     // ids order the debit second) → every user independently ends at
-    // (0, 200, 1). Forces multiple partitions AND key changes inside
-    // each partition, the two emission paths of the scan iterator.
+    // (0, 200, 1). Spreads the users over several shuffle partitions with
+    // several users in each, so every user's sorted group must start
+    // from fresh state.
     val rows = (1L to 40L).flatMap { u =>
       Seq((2 * u, "2024-01-01 00:00:00", u, "view", 2.0),
         (2 * u + 1, "2024-01-01 00:00:00", u, "purchase", 3.0))
