@@ -20,12 +20,19 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The conf under which a parquet TIMESTAMP(NANOS) column reads as raw
+    * LongType nanoseconds instead of failing the read; [[utcTimestamps]]
+    * converts it.
+    */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** The events table's `ts` has shipped in three physical parquet
     * encodings across harness generations, and the engine must read all
-    * of them to the SAME session-UTC TIMESTAMP instants the oracle sees:
+    * of them to the SAME session-UTC TIMESTAMP instants the oracle sees.
+    * The one copy of that rule, for batch and streaming reads alike:
     *
     *  - TIMESTAMP(NANOS): Spark 4 rejects it outright
-    *    (PARQUET_TYPE_ILLEGAL) — read as raw nanos (legacy conf) and
+    *    (PARQUET_TYPE_ILLEGAL) — read as raw nanos ([[NanosAsLong]]) and
     *    truncate to micros, exactly what DuckDB's micro-precision
     *    TIMESTAMP does on the same file.
     *  - timestamp[us] with isAdjustedToUTC=false: Spark 4 infers
@@ -39,17 +46,7 @@ object Tables {
     * written against one type; conversion is schema-conditional so each
     * branch is a no-op for the other encodings.
     */
-  private def loadNanosSafe(spark: SparkSession, dir: String, name: String,
-      tsCols: Seq[String]): DataFrame = {
-    // Deliberately left SET for the session (not save/restore-scoped):
-    // the parquet reader consults it lazily at each action's
-    // reader-factory build, so restoring it after read() would break
-    // later actions on the returned frame. Session-wide consequence: a
-    // TIMESTAMP(NANOS) column in any OTHER parquet read surfaces as raw
-    // LongType instead of erroring — normalize such columns at their own
-    // load boundary exactly as this helper does for `tsCols`.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(spark, dir, name)
+  def utcTimestamps(df: DataFrame, tsCols: Seq[String]): DataFrame =
     tsCols.foldLeft(df) { (d, c) =>
       d.schema(c).dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -59,6 +56,18 @@ object Tables {
         case _ => d
       }
     }
+
+  private def loadNanosSafe(spark: SparkSession, dir: String, name: String,
+      tsCols: Seq[String]): DataFrame = {
+    // Deliberately left SET for the session (not save/restore-scoped):
+    // the parquet reader consults it lazily at each action's
+    // reader-factory build, so restoring it after read() would break
+    // later actions on the returned frame. Session-wide consequence: a
+    // TIMESTAMP(NANOS) column in any OTHER parquet read surfaces as raw
+    // LongType instead of erroring — normalize such columns at their own
+    // load boundary with [[utcTimestamps]].
+    spark.conf.set(NanosAsLong, "true")
+    utcTimestamps(load(spark, dir, name), tsCols)
   }
 
   /** S4 JDBC flavor (ref `interactive_dashboard.py:23-27`: read_sql_table

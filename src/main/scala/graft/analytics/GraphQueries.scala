@@ -407,7 +407,7 @@ object GraphQueries extends QueryPack {
         if (graft.ops.JoinGate.inputBytes(edges(s, d)) <=
             graft.ops.JoinGate.JaccardPriceBytes) 0L
         else capped.groupBy(col("cu")).agg(count(lit(1)).as("d"))
-          .agg(sum(col("d") * col("d")).as("w")).head.getLong(0)
+          .agg(sum(col("d") * col("d")).as("w")).head().getLong(0)
       val parts = math.min(2000L, wedges / 8000000L + 1L).toInt
       // AQE's coalescing floors at the cluster parallelism
       // (parallelismFirst), so the explicit exchange is only needed

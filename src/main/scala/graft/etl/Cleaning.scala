@@ -12,12 +12,17 @@ import org.apache.spark.sql.functions._
   */
 object Cleaning {
 
-  /** Python-`strip()`-equivalent trim: Spark's `trim` removes only ASCII
+  /** Python-`strip()`-style trim: Spark's `trim` removes only ASCII
     * spaces and Java's `\s` only ASCII whitespace, but Python strips the
     * full Unicode set — an NBSP-padded cell (`"M "`) must compare
     * equal to `"M"` exactly as the reference sees it. The class below is
-    * Python 3's `str.isspace()` set: ASCII `\s` + NEL + NBSP + the
-    * Unicode space separators and line/paragraph separators.
+    * Java's `\s` (`[ \t\n\x0B\f\r]`) plus U+0085, U+00A0, U+1680,
+    * U+2000-200A, U+2028, U+2029, U+202F, U+205F and U+3000.
+    *
+    * Known gap: Python 3's `str.isspace()` set also holds the
+    * information separators U+001C-001F, which this class does not, so
+    * a cell padded with them keeps them here and loses them in the
+    * reference.
     */
   private val PyWs =
     "[\\s\\u0085\\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000]"

@@ -22,7 +22,7 @@ object Patients {
     * lowercase — driver-side on column NAMES only.
     */
   def normalizeColumnNames(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(c =>
+    df.toDF(df.columns.toIndexedSeq.map(c =>
       c.trim.replaceAll("\\uFEFF", "").replaceAll(" +", "_").toLowerCase): _*)
 
   /** S1 (ref `etl.py:38`): header CSV, utf-8-sig. Spark's CSV reader does

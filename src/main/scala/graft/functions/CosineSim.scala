@@ -1,28 +1,30 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Cosine similarity of two `array<float>` embedding columns as a
-  * native codegen expression — the hot scalar of the whole ANN family
-  * (brute-force scoring, LSH/IVF/PQ candidate verification, embedding
-  * near-dup, SemDeDup).
+  * static kernel that `StaticInvoke` runs inside whole-stage codegen —
+  * the hot scalar of the whole ANN family (brute-force scoring,
+  * LSH/IVF/PQ candidate verification, embedding near-dup, SemDeDup).
   *
   * Why an Expression and not the previous Scala UDF: the UDF boundary
   * deserializes each `ArrayData` into an `Array[Float]` per call and
   * breaks whole-stage codegen around the scoring projection; this
-  * expression reads the columnar `ArrayData` in place (`getFloat(i)`)
+  * kernel reads the columnar `ArrayData` in place (`getFloat(i)`)
   * inside the generated operator. The arithmetic is IDENTICAL to
   * [[graft.llm.Hashing.cosine]] — same index-order double accumulation,
   * same final `dot/(√na·√nb)` — so every pinned ranking (6-dp quantized
   * rank convention) is unchanged.
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends RuntimeReplaceable with BinaryLike[Expression]
+    with ImplicitCastInputTypes {
 
   // declared input types: the analyzer inserts elementwise casts for
   // array<double>/array<int> inputs (a SQL array literal is
@@ -30,15 +32,10 @@ case class CosineSim(left: Expression, right: Expression)
   // bytes of wider slots and return garbage similarities silently
   override def inputTypes: Seq[DataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.CosineSim.cosine($a, $b)")
+  override lazy val replacement: Expression = StaticInvoke(classOf[CosineSim],
+    DoubleType, "cosine", Seq(left, right), inputTypes, returnNullable = false)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -47,9 +44,8 @@ case class CosineSim(left: Expression, right: Expression)
 
 object CosineSim {
 
-  /** Shared by interpreted + codegen paths. Index-order accumulation in
-    * double precision — bit-identical to Hashing.cosine on the same
-    * inputs.
+  /** The kernel. Index-order accumulation in double precision —
+    * bit-identical to Hashing.cosine on the same inputs.
     */
   def cosine(a: ArrayData, b: ArrayData): Double = {
     var dot = 0.0

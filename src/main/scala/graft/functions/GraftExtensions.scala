@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** SQL surface for the engine's custom expressions. Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
@@ -14,93 +15,53 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * their n/window parameters are query-construction constants.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.{binary, kmvBuilder, unary}
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("nfkc_lower"),
-      new ExpressionInfo(classOf[NfkcLower].getName, "nfkc_lower"),
-      unary("nfkc_lower", NfkcLower)))
-    ext.injectFunction((
-      new FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      unary("poly_hash", PolyHash.apply(_: Expression))))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      binary("cosine_sim", CosineSim(_, _))))
-    ext.injectFunction((
-      new FunctionIdentifier("tokenize_words"),
-      new ExpressionInfo(classOf[Tokenize].getName, "tokenize_words"),
-      unary("tokenize_words", Tokenize.apply(_: Expression))))
-    ext.injectFunction((
-      new FunctionIdentifier("kmv_estimate"),
-      new ExpressionInfo(classOf[KmvEstimate].getName, null, "kmv_estimate",
-        "_FUNC_(sketch, k) - Floored KMV distinct estimate over a FINISHED" +
-          " md5-60 sketch (kmv_sketch_md5 output or merged sketches):" +
-          " ascending positive 60-bit hash minima. Other arrays - e.g. a" +
-          " sign-flipped xxhash sketch or one ending in a non-positive" +
-          " value - fail at eval time by contract.",
-        ""),
-      kmvBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, build) =>
+      // the info names the class that defines the SQL function: this one
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
+    }
 }
 
 object GraftExtensions {
-  /** Arity-checked unary builder: a zero-arg call must fail as an
-    * analysis-time error, not a bare NoSuchElementException, and extra
-    * arguments must not be silently dropped.
+  /** The one list of SQL functions: name and arity-checked builder. A
+    * wrong argument count fails as an analysis-time error, not a bare
+    * NoSuchElementException, and extra arguments are never dropped.
     */
-  private[functions] def unary(name: String,
-      build: Expression => Expression): Seq[Expression] => Expression =
-    children => {
-      require(children.size == 1,
-        s"$name expects exactly 1 argument, got ${children.size}")
-      build(children.head)
-    }
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    sql("nfkc_lower", 1)(a => NfkcLower(a(0))),
+    sql("poly_hash", 1)(a => PolyHash(a(0))),
+    sql("cosine_sim", 2)(a => CosineSim(a(0), a(1))),
+    sql("tokenize_words", 1)(a => Tokenize(a(0))),
+    sql("kmv_estimate", 2)(a => KmvEstimate(a(0), kmvWidth(a(1)))))
 
-  private[functions] def binary(name: String,
-      build: (Expression, Expression) => Expression): Seq[Expression] => Expression =
-    children => {
-      require(children.size == 2,
-        s"$name expects exactly 2 arguments, got ${children.size}")
-      build(children.head, children(1))
+  private def sql(name: String, arity: Int)(build: Seq[Expression] => Expression)
+      : (String, Seq[Expression] => Expression) =
+    name -> { children =>
+      require(children.size == arity,
+        s"$name expects exactly $arity argument(s), got ${children.size}")
+      build(children)
     }
 
   /** `kmv_estimate(sketch, k)`: the width is part of the sketch's
     * CONSTRUCTION, not per-row data, so it must be a foldable integer
     * literal — anything else is an analysis-time error.
     */
-  private[functions] val kmvBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.size == 2,
-        s"kmv_estimate expects exactly 2 arguments, got ${children.size}")
-      val kExpr = children(1)
-      require(kExpr.foldable,
-        "kmv_estimate: k must be a foldable integer literal")
-      val k = kExpr.eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case s: Short => s.toInt
-        case b: Byte => b.toInt
-        case other =>
-          throw new IllegalArgumentException(
-            s"kmv_estimate: k must be integral, got $other")
-      }
-      KmvEstimate(children.head, k)
+  private def kmvWidth(kExpr: Expression): Int = {
+    require(kExpr.foldable, "kmv_estimate: k must be a foldable integer literal")
+    kExpr.eval(null) match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case s: Short => s.toInt
+      case b: Byte => b.toInt
+      case other =>
+        throw new IllegalArgumentException(s"kmv_estimate: k must be integral, got $other")
     }
+  }
 
   /** Late registration onto an existing session (harness driver path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "nfkc_lower", unary("nfkc_lower", NfkcLower))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "poly_hash", unary("poly_hash", PolyHash.apply(_: Expression)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "cosine_sim", binary("cosine_sim", CosineSim(_, _)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "tokenize_words", unary("tokenize_words", Tokenize.apply(_: Expression)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "kmv_estimate", kmvBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, build) =>
+      ColumnBridge.registerTempFunction(spark, name, build)
+    }
 }

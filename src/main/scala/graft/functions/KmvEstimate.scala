@@ -1,24 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Floored KMV distinct estimate over a FINISHED md5-60 sketch
   * ([[KmvAgg.sketchMd5]] / [[KmvAgg.mergeSketches]] output: ascending
-  * hash minima, exact set below width `k`) as a native codegen
-  * expression — the per-row estimator the HyperBall family applies to
-  * every node's ball sketch.
+  * hash minima, exact set below width `k`) as a static kernel that
+  * `StaticInvoke` runs inside whole-stage codegen — the per-row
+  * estimator the HyperBall family applies to every node's ball sketch.
   *
-  * Why an Expression and not the Scala `udf` it replaces: the udf paid
-  * the serialization boundary (ArrayData → Seq[Long] → Array[Long]) and
-  * broke whole-stage codegen between the sketch aggregation and the
-  * top-k ranking — the [[Tokenize]]/[[CosineSim]] precedent. Here the
-  * generated code reads the sketch's last element in place; no per-row
+  * Why not the Scala `udf` it replaces: the udf paid the serialization
+  * boundary (ArrayData → Seq[Long] → Array[Long]) and broke whole-stage
+  * codegen between the sketch aggregation and the top-k ranking — the [[Tokenize]]/[[CosineSim]] precedent. Here the
+  * kernel reads the sketch's last element in place; no per-row
   * allocation at all.
   *
   * The arithmetic is the IDENTICAL IEEE expression to
@@ -26,29 +26,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * text every KMV oracle writes): `(k−1) / (v_k / 2⁶⁰)`, floored —
   * KmvSpec pins expression == helper on random sketches so the two
   * copies cannot drift.
+  *
+  * SQL `kmv_estimate(sketch, k)` ([[GraftExtensions]]) takes `k` as a
+  * foldable integer literal: the width is part of the sketch's
+  * construction, not per-row data.
   */
-case class KmvEstimate(child: Expression, k: Int) extends UnaryExpression {
+case class KmvEstimate(child: Expression, k: Int) extends RuntimeReplaceable
+    with UnaryLike[Expression] {
   require(k >= 2, s"k must be >= 2: $k")
 
-  override def dataType: DataType = LongType
   override def prettyName: String = "kmv_estimate"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"kmv_estimate expects array<bigint>, got ${other.catalogString}")
+      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"kmv_estimate expects array<bigint>, got ${other.catalogString}")
     }
 
-  override protected def nullSafeEval(input: Any): Any =
-    KmvEstimate.estMd5Floor(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.KmvEstimate.estMd5Floor($c, $k)")
+  override lazy val replacement: Expression = StaticInvoke(classOf[KmvEstimate],
+    LongType, "estMd5Floor", Seq(child, Literal(k)), returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): KmvEstimate =
     copy(child = newChild)
@@ -56,9 +53,9 @@ case class KmvEstimate(child: Expression, k: Int) extends UnaryExpression {
 
 object KmvEstimate {
 
-  /** Shared by interpreted + codegen paths. The sketch is ascending by
-    * construction, so its LAST element is v_k; below width the sketch
-    * IS the distinct set and the estimate is its exact size.
+  /** The kernel. The sketch is ascending by construction, so its LAST
+    * element is v_k; below width the sketch IS the distinct set and the
+    * estimate is its exact size.
     *
     * md5-60-only contract, enforced: v_k must be a positive 60-bit hash
     * minimum. A non-positive v_k means the input is NOT a finished

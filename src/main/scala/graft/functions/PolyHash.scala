@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,26 +13,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The document-fingerprinting primitive: because the hash is
   * position-polynomial it extends incrementally (h' = h·B + b), which is
-  * what makes window/winnowing fingerprint schemes cheap. Native
-  * expression with `doGenCode`: the loop compiles into the generated
-  * operator, one pass over the bytes, no UDF boundary, stays inside
-  * whole-stage codegen next to the rest of the projection.
+  * what makes window/winnowing fingerprint schemes cheap. The loop is a
+  * static kernel that `StaticInvoke` calls from the generated operator:
+  * one pass over the bytes, no UDF boundary, inside whole-stage codegen
+  * next to the rest of the projection.
   */
-case class PolyHash(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
+case class PolyHash(child: Expression) extends RuntimeReplaceable
+    with UnaryLike[Expression] with ImplicitCastInputTypes {
 
-  // analyzer-inserted cast — see NfkcLower: SQL calls on non-string
-  // columns must match the Column API's Cast wrapper
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType)
-  override def dataType: DataType = LongType
+  // analyzer-inserted cast — see NfkcLower
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def prettyName: String = "poly_hash"
 
-  override def nullSafeEval(input: Any): Any =
-    PolyHash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PolyHash.hash($c)")
+  override lazy val replacement: Expression = StaticInvoke(classOf[PolyHash],
+    LongType, "hash", Seq(child), inputTypes, returnNullable = false)
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash =
     copy(child = newChild)
@@ -40,7 +35,7 @@ case class PolyHash(child: Expression) extends UnaryExpression
 object PolyHash {
   final val Base = 1000003L
 
-  /** Shared by interpreted + codegen paths. */
+  /** The kernel. */
   def hash(s: UTF8String): Long = {
     val bytes = s.getBytes
     var h = 0L
@@ -52,10 +47,6 @@ object PolyHash {
     h
   }
 
-  def apply(c: Column): Column = {
-    val e = ColumnBridge.expression(c)
-    val stringly =
-      if (e.resolved && e.dataType == StringType) e else Cast(e, StringType)
-    ColumnBridge.column(PolyHash(stringly))
-  }
+  def apply(c: Column): Column =
+    ColumnBridge.column(PolyHash(ColumnBridge.expression(c)))
 }

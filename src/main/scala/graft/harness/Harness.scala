@@ -130,7 +130,7 @@ object Harness {
     * cleanup is never billed to whatever runs next.
     */
   private def release(sc: SparkContext, before: collection.Set[Int]): Unit =
-    (pinned(sc) -- before).values.foreach(_.unpersist(blocking = false))
+    for ((id, rdd) <- pinned(sc) if !before(id)) rdd.unpersist(blocking = false)
 
   /** Runs `body` and then, on every exit path, unpersists exactly the RDDs
     * it pinned (eager `localCheckpoint`s of staged operators). Blocks left

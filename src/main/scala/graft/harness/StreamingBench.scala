@@ -63,7 +63,7 @@ object StreamingBench {
     */
   private def corpus(spark: SparkSession, dir: String): (Array[DocStream.Doc], DataFrame) = {
     import spark.implicits._
-    val docsDf = spark.read.parquet(s"$dir/documents.parquet")
+    val docsDf = graft.Tables.documents(spark, dir)
     val docs = docsDf.select(col("doc_id"), col("text"), col("lang"), col("source"))
       .as[DocStream.Doc].collect()
     val benchFps = docsDf.filter(col("doc_id") < 50)

@@ -25,8 +25,7 @@ object TextAnalysis {
   private[llm] final val Ws = "[ \t\n\f\r]"
 
   /** Column plumbing for the codegen text-scan expressions: wrap the
-    * column's expression, return a column ([[graft.functions.Tokenize]]
-    * handles its own cast; these take the text column as-is).
+    * column's expression, return a column.
     */
   private def expr2col(
       build: org.apache.spark.sql.catalyst.expressions.Expression =>

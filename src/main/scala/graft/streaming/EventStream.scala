@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.Tables
 import graft.ops.Checkpoints.StageCheckpoint
 
 /** Structured Streaming surface over the `events` schema (SURVEY §2.7: the
@@ -212,33 +213,25 @@ object EventStream {
   def runFileStream(spark: SparkSession, srcDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     // normalize ts to a session-UTC TIMESTAMP whatever the parquet
-    // encoding (nanos-as-long / NTZ micros / adjusted micros), exactly
-    // like Tables.events — without the legacy conf the schema inference
-    // itself throws PARQUET_TYPE_ILLEGAL on nanos files. srcDir must
-    // already hold at least one file: a file STREAM can start on an
+    // encoding (Tables.utcTimestamps) — without the nanos conf the schema
+    // inference itself throws PARQUET_TYPE_ILLEGAL on nanos files. srcDir
+    // must already hold at least one file: a file STREAM can start on an
     // empty dir only with an explicit schema, which inference here
     // cannot provide.
-    val confKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prevConf = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "true")
+    val prevConf = spark.conf.getOption(Tables.NanosAsLong)
+    spark.conf.set(Tables.NanosAsLong, "true")
     val schema = spark.read.parquet(srcDir).schema
     // nanos files need the conf for every micro-batch read too — leave
     // it set ONLY in that case, otherwise restore the caller's session
     // state (setting it permanently changes unrelated batch reads)
     if (schema("ts").dataType != org.apache.spark.sql.types.LongType) {
       prevConf match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
+        case Some(v) => spark.conf.set(Tables.NanosAsLong, v)
+        case None => spark.conf.unset(Tables.NanosAsLong)
       }
     }
-    val raw = spark.readStream.schema(schema).parquet(srcDir)
-    val in = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    val in = Tables.utcTimestamps(
+      spark.readStream.schema(schema).parquet(srcDir), Seq("ts"))
     hourlyCounts(in).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
@@ -482,7 +475,7 @@ class TimerSessionProcessor extends org.apache.spark.sql.streaming.StatefulProce
       expiredTimerInfo: ExpiredTimerInfo): Iterator[EventStream.SessionOut] = {
     if (sess.exists()) {
       val (st, last, n, s) = sess.get()
-      if (expiredTimerInfo.getExpiryTimeInMs >= last / 1000 + GapMs) {
+      if (expiredTimerInfo.getExpiryTimeInMs() >= last / 1000 + GapMs) {
         sess.clear()
         Iterator.single(EventStream.SessionOut(user, st, last, n, s, "timer"))
       } else Iterator.empty
