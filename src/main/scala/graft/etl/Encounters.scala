@@ -27,10 +27,10 @@ object Encounters {
     * `,`; blank lines and repeated embedded header lines dropped; >6
     * fields truncated, <6 null-padded; every cell trimmed.
     *
-    * Pure built-ins over `spark.read.text`: filter + split + transform +
-    * try_element_at (past-end yields null = the pad). One narrow scan, no
-    * UDF, fully codegen'd — at 100 TB this is an embarrassingly parallel
-    * per-line map with no shuffle.
+    * Pure built-ins over `spark.read.text`: filter + split +
+    * try_element_at (past-end yields null = the pad) + `wsTrim` per cell.
+    * One narrow scan, no UDF, fully codegen'd — at 100 TB this is an
+    * embarrassingly parallel per-line map with no shuffle.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val lines = spark.read.text(path)
@@ -43,11 +43,11 @@ object Encounters {
     val parts = when(
       col("value").contains(";") && !col("value").contains(","),
       split(col("value"), ";"))
-      .otherwise(transform(split(col("value"), ","), x => trim(x)))
+      .otherwise(split(col("value"), ","))
     val projected = columns.zipWithIndex.map { case (name, i) =>
-      // wsTrim covers the ';' branch (the reference strip()s those via its
-      // final applymap — all whitespace, not just ASCII spaces); empty
-      // strings from ,, stay "" as in pandas
+      // wsTrim strips every cell of both branches (the reference strip()s
+      // them — all whitespace, not just ASCII spaces); empty strings
+      // from ,, stay "" as in pandas
       Cleaning.wsTrim(try_element_at(parts, lit(i + 1))).as(name)
     }
     lines.select(projected :+ col("_ord"): _*)

@@ -157,7 +157,7 @@ class EdgeCaseSpec extends SparkSpec {
     graft.llm.Ann.cosineNearDupPairs(vecs, "vec_id", "embedding", 0.9).count()
     // at 100 TB an unpersist-less cache is a leak; these operators must
     // not pin storage the caller can never release
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
@@ -197,9 +197,11 @@ class EdgeCaseSpec extends SparkSpec {
   test("wsTrim strips the full Python whitespace set, not just ASCII") {
     // NBSP-, ideographic-space-, and NEL-padded cells must trim exactly
     // like Python str.strip() does in the reference (ASCII \s misses all
-    // three); interior whitespace stays
-    val got = Seq("M\u00A0", "\u3000F\u3000", "\u0085x", " a b ")
+    // three); interior whitespace stays, and a 300-char padding run (the
+    // messy encounters file pads with 60-80) strips like a short one
+    val long = " " * 150 + "\u00A0\t" * 75 + "e 1" + "\u2003" * 300
+    val got = Seq("M\u00A0", "\u3000F\u3000", "\u0085x", " a b ", long)
       .toDF("s").select(Cleaning.wsTrim(col("s"))).collect().map(_.getString(0))
-    assert(got.toSeq === Seq("M", "F", "x", "a b"))
+    assert(got.toSeq === Seq("M", "F", "x", "a b", "e 1"))
   }
 }

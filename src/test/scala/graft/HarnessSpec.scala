@@ -30,7 +30,7 @@ class HarnessSpec extends SparkSpec {
     def body(fail: Boolean): Unit = {
       val before = pinned
       spark.range(1000).localCheckpoint()
-      inBody = (sc.getPersistentRDDs -- before).values.toSeq
+      inBody = (sc.getPersistentRDDs.toMap -- before).values.toSeq
       if (fail) throw new IllegalStateException("after checkpoint")
     }
     def released = inBody.nonEmpty && inBody.forall(_.getStorageLevel == StorageLevel.NONE)

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Physical-plan contracts — the properties that make these queries
   * viable at 1000-executor / 100 TB scale, asserted so a refactor can't
@@ -23,6 +24,15 @@ class PlanShapeSpec extends SparkSpec {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+
+  /** Every operator of `p`, including the plans behind AQE's query
+    * stages and reused exchanges, which `collect` does not descend into.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case _ => p.children
+  }).flatMap(nodes)
 
   private def planString(df: DataFrame): String = {
     df.collect() // finalize AQE so the real join strategies are visible
@@ -106,6 +116,15 @@ class PlanShapeSpec extends SparkSpec {
       assert(fileScans(r.logs) === 2, planOf(r.logs).toString)
       Seq(r.patients, r.encounters, r.diagnoses).foreach { df =>
         assert(fileScans(df) <= 1, planOf(df).toString)
+      }
+      // the messy-CSV scan strips cells with the linear trim: a regex
+      // (quadratic in a whitespace run) or a higher-order `transform`
+      // (interpreted inside the generated stage) must not come back
+      Seq(r.encounters, r.logs).foreach { df =>
+        val found = nodes(planOf(df)).flatMap(_.expressions.flatMap(_.collect {
+          case e if Set("regexp_replace", "transform")(e.prettyName) => e.prettyName
+        }))
+        assert(found.isEmpty, planOf(df).toString)
       }
     } finally {
       prev match {

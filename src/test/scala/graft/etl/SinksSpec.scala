@@ -35,7 +35,7 @@ class SinksSpec extends SparkSpec {
     // the status store is fed by the listener bus: drain it so a job that
     // has ended is not still listed as running
     ListenerDrain.drain(spark.sparkContext)
-    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     assert(spark.read.parquet(s"$out/patients").count() === 11)
     assert(spark.read.parquet(s"$out/encounters").count() === 8)
     assert(spark.read.parquet(s"$out/logs").count() === 12)

@@ -86,7 +86,7 @@ class FunctionsSpec extends SparkSpec {
     // component doubled (cosine slightly below 1 but >= 0.9)
     val planted = emb.filter(col("vec_id") === 0)
       .select(lit(9000L).as("vec_id"), col("embedding"), col("label"))
-    val all = emb.unionByName(planted.select(emb.columns.map(col): _*))
+    val all = emb.unionByName(planted.select(emb.columns.toSeq.map(col): _*))
     val pairs = Ann.cosineNearDupPairs(all, "vec_id", "embedding", 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq === Seq((0L, 9000L))) // the plant, nothing else

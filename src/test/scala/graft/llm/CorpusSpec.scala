@@ -164,7 +164,7 @@ class CorpusSpec extends SparkSpec {
 
   test("scrubPii ordering: email hosts are not half-eaten by the IP pass") {
     val df = Seq((1L, "u@1.2.3.4x.com and raw 1.2.3.4")).toDF("doc_id", "text")
-    val s = df.select(TextAnalysis.scrubPii(col("text"))).head.getString(0)
+    val s = df.select(TextAnalysis.scrubPii(col("text"))).head().getString(0)
     assert(s === "<EMAIL> and raw <IP>")
   }
 
