@@ -1,7 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.Column
+import graft.functions.NfkcLower
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Pure columnar cleaning expressions (SURVEY.md §2.3) — each is a
   * `Column => Column` built ONLY from Catalyst built-ins (`when`,
@@ -36,6 +38,18 @@ object Cleaning {
       "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200A" +
       "\u2028\u2029\u202F\u205F\u3000"
   def wsTrim(c: Column): Column = trim(c, StripChars)
+
+  // ---------------------------------------------------------------- P2
+  /** P2 `clean_utf8` applied to every string-typed column (ref
+    * applymap(clean_utf8): bools/timestamps/doubles survive untouched,
+    * strings — including the ids — are NFKC-normalized and lowercased).
+    */
+  def applyCleanUtf8(df: DataFrame): DataFrame = {
+    val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSet
+    df.select(df.columns.map { c =>
+      if (stringCols(c)) NfkcLower(col(c)).as(c) else col(c)
+    }.toIndexedSeq: _*)
+  }
 
   // ---------------------------------------------------------------- P3
   /** `height_to_cm` (ref `etl.py:146-183`): unit-sniffing height
@@ -77,8 +91,8 @@ object Cleaning {
     * intermediates are non-cheap and multiply-referenced, which is
     * exactly its no-collapse condition).
     */
-  def withWeightKg(df: org.apache.spark.sql.DataFrame, weight: Column,
-      heightCm: Column, out: String): org.apache.spark.sql.DataFrame = {
+  def withWeightKg(df: DataFrame, weight: Column,
+      heightCm: Column, out: String): DataFrame = {
     val w = col("_wk_w"); val h = col("_wk_h")
     val s = col("_wk_s"); val num = col("_wk_num"); val h2 = col("_wk_h2")
     df.withColumn("_wk_w", weight)
@@ -173,44 +187,34 @@ object Cleaning {
   }
 
   // ---------------------------------------------------------------- P6/P7
-  /** Multi-format date parse, month-first preference (ref `etl.py:370-424`
-    * uses `pd.to_datetime` ⇒ dateutil, which auto-falls-back to day-first
-    * when the month slot exceeds 12 — so "31-12-1985" parses on the FIRST
-    * pass and the reference's `day_month_swapped` log never fires on its
-    * own fixtures; we mirror that with an ordered coalesce where
-    * month-first formats precede day-first ones).
+  /** Date orders, month-first before day-first (ref `etl.py:370-424` P6
+    * dob and `:512-536` P7 admit/discharge both call `pd.to_datetime` ⇒
+    * dateutil, which falls back to day-first only when the month slot
+    * exceeds 12 — so "31-12-1985" parses on the FIRST pass and the
+    * reference's `day_month_swapped` log never fires on its own fixtures).
+    * Each order takes an optional time with seconds and offset (dateutil
+    * accepts them on every order), the ISO order also its `T` form.
+    * try_to_timestamp requires a total match, so the optional sections
+    * cannot fit one string two ways: only the patterns' order is semantic.
     */
-  val dateFormats: Seq[String] = Seq(
-    "yyyy-M-d", "yyyy/M/d", "M/d/yyyy", "M-d-yyyy", "d/M/yyyy", "d-M-yyyy")
-
-  /** Datetime formats for encounters (ref `etl.py:512-536`): tz offsets
-    * (`+01:00`, `Z`) and naive forms, month-first preference. Parsed under
-    * a UTC session timezone this reproduces `to_datetime(utc=True)` +
-    * `tz_localize(None)`: offset-carrying strings collapse to the UTC
-    * instant, naive strings are taken as UTC (P8 tz-strip is then a no-op).
-    *
-    * The full cross-product of date-order × time-precision × offset is
-    * generated (dateutil accepts seconds and offsets on EVERY date order,
-    * not just the ISO form); try_to_timestamp requires a total match, so
-    * within one date order the time variants can't mis-parse each other —
-    * only the month-first-before-day-first ordering is semantic.
-    */
-  val datetimeFormats: Seq[String] = {
-    val times = Seq("H:mm:ssXXX", "H:mm:ss", "H:mmXXX", "H:mm")
-    dateFormats.flatMap(d => times.map(t => s"$d $t")) ++
-      Seq("yyyy-M-d'T'H:mm:ssXXX", "yyyy-M-d'T'H:mm:ss",
-        "yyyy-M-d'T'H:mmXXX", "yyyy-M-d'T'H:mm")
-  }
+  private val datetimeFormats =
+    Seq("yyyy-M-d", "yyyy/M/d", "M/d/yyyy", "M-d-yyyy", "d/M/yyyy", "d-M-yyyy")
+      .map(d => s"$d[ H:mm[:ss][XXX]]") :+ "yyyy-M-d'T'H:mm[:ss][XXX]"
 
   /** upper() before matching: clean_utf8 lowercases cells BEFORE parsing
     * in the encounters flow, and Java format literals ('T', XXX's Z) only
     * match uppercase — dateutil is case-insensitive, so mirror that. The
     * formats contain no month-name fields, so uppercasing is lossless.
     */
-  def parseMulti(c: Column, formats: Seq[String]): Column =
+  private def parseMulti(c: Column, formats: Seq[String]): Column =
     coalesce(formats.map(f => try_to_timestamp(upper(wsTrim(c)), lit(f))): _*)
 
-  def parseDate(c: Column): Column = parseMulti(c, dateFormats ++ datetimeFormats)
+  /** P6 pass 1 and P7. Under a UTC session timezone this reproduces
+    * `to_datetime(utc=True)` + `tz_localize(None)`: offset-carrying strings
+    * collapse to the UTC instant, naive strings are taken as UTC (P8
+    * tz-strip is then a no-op).
+    */
+  def parseDatetime(c: Column): Column = parseMulti(c, datetimeFormats)
 
   /** P6 pass 2 (ref `etl.py:399-410`): the `dayfirst=True` retry, tried
     * only when pass 1 fails, logging `day_month_swapped` on success.
@@ -221,11 +225,7 @@ object Cleaning {
     * (verified against pandas 2.2.2 + dateutil). These two formats are
     * therefore exactly the pass-2-only surface.
     */
-  val dateFormatsPass2: Seq[String] = Seq("yyyy-d-M", "yyyy/d/M")
-
-  def parseDatePass2(c: Column): Column = parseMulti(c, dateFormatsPass2)
-
-  def parseDatetime(c: Column): Column = parseMulti(c, datetimeFormats ++ dateFormats)
+  def parseDatePass2(c: Column): Column = parseMulti(c, Seq("yyyy-d-M", "yyyy/d/M"))
 
   // ---------------------------------------------------------------- P9
   /** length_of_stay_hours (ref `etl.py:590-593`). Double-epoch cast keeps

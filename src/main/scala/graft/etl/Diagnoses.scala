@@ -29,11 +29,9 @@ object Diagnoses {
   /** recordedAt: ISO-8601 with optional offset, date-only fallback
     * (ref `etl.py:114-119`: fromisoformat, retry with +"T00:00:00").
     */
-  private def parseRecordedAt(c: Column): Column = coalesce(
-    try_to_timestamp(c, lit("yyyy-M-d'T'H:mm:ssXXX")),
-    try_to_timestamp(c, lit("yyyy-M-d'T'H:mm:ss")),
-    try_to_timestamp(c, lit("yyyy-M-d H:mm:ss")),
-    try_to_timestamp(c, lit("yyyy-M-d")))
+  private[etl] def parseRecordedAt(c: Column): Column = coalesce(
+    try_to_timestamp(c, lit("yyyy-M-d['T'H:mm:ss[XXX]]")),
+    try_to_timestamp(c, lit("yyyy-M-d H:mm:ss")))
 
   /** S3 (ref `etl.py:97-132`): Spark 4 ships the XML source natively —
     * rowTag row-splitting is distributable (the input is split on tag
@@ -91,7 +89,7 @@ object Diagnoses {
 
     // --- P2 clean_utf8 (ref etl.py:690): strings only; the is_primary
     // bool and recorded_at timestamp survive ---
-    val cleaned = Patients.applyCleanUtf8(marked
+    val cleaned = Cleaning.applyCleanUtf8(marked
       .filter(col("code").isNotNull && col("_rank") === 1)
       .drop("_orig_eid", "_orig_ip", "_ord", "_rank"))
     (cleaned, logs)

@@ -120,7 +120,7 @@ object Encounters {
 
     // --- outer clean_utf8 pass (ref etl.py:684): lowercases the UNKNOWN
     // sentinel; timestamps/doubles survive ---
-    val cleaned = Patients.applyCleanUtf8(
+    val cleaned = Cleaning.applyCleanUtf8(
       withLos.drop("_ord", "_admit_raw", "_discharge_raw", "_rank", "_group_n"))
     (cleaned, logs)
   }

@@ -35,7 +35,7 @@ object EtlPipeline {
     val (e, eLog) = Encounters.run(spark, encountersCsv)
     val (d, dLog) = Diagnoses.run(spark, diagnosesXml)
     // final applymap(clean_utf8) over the log table itself (ref etl.py:695)
-    EtlResult(p, e, d, Patients.applyCleanUtf8(pLog.union(eLog).union(dLog)))
+    EtlResult(p, e, d, Cleaning.applyCleanUtf8(pLog.union(eLog).union(dLog)))
   }
 
   /** [[run]] over a fixture directory's three standard file names. */

@@ -150,7 +150,7 @@ object EtlQueries extends QueryPack {
         .when(b === 1, date_format(col("dt"), "MM/dd/yyyy"))
         .when(b === 2, date_format(col("dt"), "dd-MM-yyyy"))
         .otherwise(date_format(col("dt"), "yyyy/MM/dd"))
-      val parsed = Cleaning.parseDate(str)
+      val parsed = Cleaning.parseDatetime(str)
       t.select(b.as("bucket"), parsed.as("p"), col("dt"))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("n"),

@@ -1,6 +1,5 @@
 package graft.etl
 
-import graft.functions.NfkcLower
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -69,7 +68,7 @@ object Patients {
     // --- P6 dob two-pass parse: pass 1 (dayfirst=False incl. dateutil's
     // month>12 auto-swap) then pass 2 (yyyy-d-M retry, logged) ---
     val withDob = withSex
-      .withColumn("_dob_p1", Cleaning.parseDate(col("dob")))
+      .withColumn("_dob_p1", Cleaning.parseDatetime(col("dob")))
       .withColumn("_dob_p2", Cleaning.parseDatePass2(col("dob")))
       .withColumn("dob_parsed", coalesce(col("_dob_p1"), col("_dob_p2")))
 
@@ -143,18 +142,7 @@ object Patients {
     val dropped = deduped.drop(
       "weight", "height", "_w", "_sex_reason", "_dob_p1", "_dob_p2",
       "_hr", "_wr", "_id_dup", "_person_dup", "_ord")
-    (applyCleanUtf8(dropped), logs)
-  }
-
-  /** P2 applied to every string-typed column (ref applymap(clean_utf8):
-    * bools/timestamps/doubles survive untouched, strings — including the
-    * ids — are NFKC-normalized and lowercased).
-    */
-  def applyCleanUtf8(df: DataFrame): DataFrame = {
-    val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSet
-    df.select(df.columns.map { c =>
-      if (stringCols(c)) NfkcLower(col(c)).as(c) else col(c)
-    }.toIndexedSeq: _*)
+    (Cleaning.applyCleanUtf8(dropped), logs)
   }
 
   def run(spark: SparkSession, path: String): (DataFrame, DataFrame) =

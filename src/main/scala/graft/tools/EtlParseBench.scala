@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * slash-ISO yyyy/M/d HH:mm the reference encounters.csv also carries),
   * naive forms, `;`-delimited lines, blank lines, re-embedded headers,
   * and missing cells, in the fixture's proportions. Codegen soundness, not
-  * just speed: every format in [[graft.etl.Cleaning.datetimeFormats]]
-  * is a FOLDABLE literal, so each `try_to_timestamp` builds its
-  * `TimestampFormatter` once per generated class, never per row — a
-  * per-row recompilation would read as lines/s collapsing at this
-  * scale vs the fixture.
+  * just speed: each of the seven date-order patterns behind
+  * [[graft.etl.Cleaning.parseDatetime]] is a FOLDABLE literal, so each
+  * `try_to_timestamp` builds its `TimestampFormatter` once per generated
+  * class, never per row — a per-row recompilation would read as lines/s
+  * collapsing at this scale vs the fixture.
   */
 object EtlParseBench {
   def main(args: Array[String]): Unit = Harness.withSession { spark =>
@@ -81,7 +81,7 @@ object EtlParseBench {
 
     // S2 alone: line scan + per-line delimiter sniff + pad/truncate
     timeIt("s2_read")(graft.etl.Encounters.read(spark, csv.getPath))
-    // S2 + P7: both datetime columns through the 34-format coalesce
+    // S2 + P7: both datetime columns through the 7-pattern coalesce
     timeIt("s2_p7_parse") {
       graft.etl.Encounters.read(spark, csv.getPath)
         .withColumn("admit_dt", graft.etl.Cleaning.parseDatetime(col("admit_dt")))

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import graft.SparkEntry
@@ -93,12 +94,25 @@ object PlanDump {
       // plan (its own QueryExecution) and leave df's AQE plan unexecuted;
       // registry queries all return bounded results
       if (exec) df.collect()
-      Right((df.queryExecution.explainString(FormattedMode),
+      Right((stable(df.queryExecution.explainString(FormattedMode)),
         if (exec) metrics(df.queryExecution.executedPlan) else Nil))
     } catch { case NonFatal(e) =>
       System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       Left(e.getMessage)
     }
+
+  /** `plan` without what differs between runs of one build: expression
+    * and exchange ids (`count#43L`, `plan_id=2378`) renumbered by first
+    * appearance, object identities (`KmvAgg@26b6c4de`) and lambda class
+    * suffixes (`$$Lambda$5385/0x…`) dropped.
+    */
+  private def stable(plan: String): String = {
+    val ids = mutable.HashMap.empty[String, Int]
+    "(#|plan_id=)\\d+".r.replaceAllIn(plan,
+      m => m.group(1) + ids.getOrElseUpdate(m.matched, ids.size + 1))
+      .replaceAll("(?<=\\$\\$Lambda)(\\$\\d+)?/0x[0-9a-f]+", "")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "")
+  }
 
   /** Per-operator SQL metrics of an executed plan (the SQL tab of a
     * headless session), indented by depth. AQE nests materialized stages

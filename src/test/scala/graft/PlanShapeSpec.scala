@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.graftshim.ListenerDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.GetTimestamp
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan contracts — the properties that make these queries
   * viable at 1000-executor / 100 TB scale, asserted so a refactor can't
@@ -25,10 +28,12 @@ class PlanShapeSpec extends SparkSpec {
       case p => p
     }
 
-  /** Every operator of `p`, including the plans behind AQE's query
-    * stages and reused exchanges, which `collect` does not descend into.
+  /** Every operator of `p`, including the plans behind AQE's root and
+    * query stages and reused exchanges, which `collect` does not descend
+    * into.
     */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
     case s: QueryStageExec => Seq(s.plan)
     case r: ReusedExchangeExec => Seq(r.child)
     case _ => p.children
@@ -132,6 +137,33 @@ class PlanShapeSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.codegen.fallback")
       }
     }
+  }
+
+  test("ETL date parse: seven try_to_timestamp per parsed column, no format cross product") {
+    // Cleaning.parseDatetime tries one optional-section pattern per date
+    // order; the encounters plan parses two columns, the patients stage
+    // one (dob) plus the two pass-2 formats. The stage runs inside the
+    // eager stage checkpoint, so its plan is the checkpoint action's.
+    var checkpointed = Seq.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") synchronized { checkpointed :+= qe.executedPlan }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = graft.etl.EtlPipeline.runDefault(spark)
+      r.encounters.collect()
+      ListenerDrain.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    def parses(p: SparkPlan) =
+      nodes(p).map(_.expressions.map(_.collect { case g: GetTimestamp => g }.size).sum).sum
+    val patients = synchronized(checkpointed).filter(p =>
+      p.output.exists(_.name == "dob_parsed"))
+    assert(patients.size === 1, patients.mkString("\n"))
+    assert(parses(planOf(r.encounters)) === 2 * 7, planOf(r.encounters).toString)
+    assert(parses(patients.head) === 7 + 2, patients.head.toString)
   }
 
   test("bucketed ops never degenerate to cartesian products") {

@@ -58,7 +58,7 @@ class PropertySpec extends SparkSpec {
     val days = samples(Gen.choose(0L, 25000L), 200, 5L)
     val cases = days.map(d => java.time.LocalDate.ofEpochDay(d).toString)
     val df = cases.toDF("raw")
-      .withColumn("got", to_date(Cleaning.parseDate(col("raw"))))
+      .withColumn("got", to_date(Cleaning.parseDatetime(col("raw"))))
     val bad = df.filter(col("got").isNull ||
       col("got").cast("string") =!= col("raw")).collect()
     assert(bad.isEmpty, bad.take(5).mkString("\n"))

@@ -117,7 +117,7 @@ class CleaningPropertySpec extends SparkSpec {
 
   test("P6: ISO dates roundtrip for every day of 4 years incl. leap day") {
     val rows = (0 until 365 * 4).toDF("off")
-      .select(col("off"), Cleaning.parseDate(
+      .select(col("off"), Cleaning.parseDatetime(
         date_format(date_add(lit("2020-01-01").cast("date"), col("off")),
           "yyyy-MM-dd")).as("p"),
         date_add(lit("2020-01-01").cast("date"), col("off")).as("d"))
@@ -130,7 +130,7 @@ class CleaningPropertySpec extends SparkSpec {
 
   test("P6: month-first preference on ambiguous dates, day-first fallback") {
     val r = Seq("05/03/2009", "31/03/2009", "05-03-2009", "31-12-1985").toDF("s")
-      .select(Cleaning.parseDate(col("s"))).collect()
+      .select(Cleaning.parseDatetime(col("s"))).collect()
     assert(r(0).getTimestamp(0).toLocalDateTime.getMonthValue === 5) // May 3
     assert(r(1).getTimestamp(0).toLocalDateTime.getMonthValue === 3) // day-first
     assert(r(2).getTimestamp(0).toLocalDateTime.getMonthValue === 5) // May 3
@@ -169,7 +169,7 @@ class CleaningPropertySpec extends SparkSpec {
       "1.2.3.4", "99999999999999999999", "∞", "NaN", "-0")
     val rows = Cleaning.withWeightKg(junk.toDF("s"), col("s"), lit(170.0), "w").select(
       Cleaning.heightToCm(col("s")).as("h"),
-      Cleaning.parseDate(col("s")).as("d"),
+      Cleaning.parseDatetime(col("s")).as("d"),
       Cleaning.sexToIso(col("s")).as("x"),
       col("w.reason").as("r"))
       .collect()
