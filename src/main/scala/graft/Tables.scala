@@ -1,30 +1,79 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the harness testdata (TESTDATA.md).
   *
   * All engine queries read the driver-generated parquet star schema from a
-  * scale-factor directory. Reads are plain `spark.read.parquet` so Catalyst
-  * gets full pushdown: filters and column pruning reach the parquet scan
-  * (`PushedFilters` / `ReadSchema` in explain), and partition sizing is
-  * governed by `spark.sql.files.maxPartitionBytes` — at 100 TB the same
-  * code simply fans out over more input splits.
+  * scale-factor directory. Each read is `spark.read.schema(s).parquet` with
+  * the table's schema resolved once per file identity (see [[load]]), so
+  * Catalyst gets full pushdown: filters and column pruning reach the
+  * parquet scan (`PushedFilters` / `ReadSchema` in explain), and partition
+  * sizing is governed by `spark.sql.files.maxPartitionBytes` — at 100 TB
+  * the same code simply fans out over more input splits.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** The conf under which a parquet TIMESTAMP(NANOS) column reads as raw
     * LongType nanoseconds instead of failing the read; [[utcTimestamps]]
     * converts it.
     */
   val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Everything a parquet schema inference reads: the qualified path, the
+    * (name, length, modificationTime) of every file under it, and the
+    * confs under which the same bytes infer to a different schema.
+    */
+  private final case class SchemaKey(path: String,
+      files: Set[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val InferenceConfs = Seq(NanosAsLong,
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** One driver-side Hadoop listing; no Spark job. */
+  private def schemaKey(spark: SparkSession, path: String): SchemaKey = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    SchemaKey(fs.makeQualified(p).toString, files,
+      InferenceConfs.map(spark.conf.getOption))
+  }
+
+  /** Reads `dir/name.parquet` with its schema supplied.
+    *
+    * Inferring a parquet schema runs a Spark job that reads the footers,
+    * so without the map a query that loads five tables would run five of
+    * them at build time, on every build. The
+    * schema is inferred on the first read of a [[SchemaKey]] and kept
+    * JVM-wide. A rewritten table lists to a new key and is inferred
+    * again: a rewrite gives the file a new modification time, and Spark's
+    * writers also give every part file a new name. Changing one of the
+    * inference confs changes the key too. (The one rewrite a key cannot
+    * see is a same-name, same-length file replaced within the file
+    * system's timestamp granularity, 1 ms on a local disk.) A failed
+    * inference, such as a TIMESTAMP(NANOS) column without [[NanosAsLong]],
+    * stores nothing and fails as the plain read does. Each rewrite leaves
+    * one small entry behind; the map is not pruned.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.computeIfAbsent(schemaKey(spark, path),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** The events table's `ts` has shipped in three physical parquet
     * encodings across harness generations, and the engine must read all

@@ -17,10 +17,11 @@ object Cleaning {
   /** Python-`strip()`-style trim: Spark's one-argument `trim` removes
     * only ASCII spaces, but Python strips the full Unicode whitespace
     * set — an NBSP-padded cell (`"M "`) must compare equal to `"M"`
-    * exactly as the reference sees it. This is Spark's two-argument
-    * `trim` over the set below: codegen'd, code-point aware, and linear
-    * in the cell's length (a backtracking `^ws+|ws+$` regex is quadratic
-    * in the length of a whitespace run).
+    * exactly as the reference sees it. This is Spark's `btrim` over the
+    * set below (the `StringTrim` that the deprecated two-parameter `trim`
+    * also resolves to): codegen'd, code-point aware, and linear in the
+    * cell's length (a backtracking `^ws+|ws+$` regex is quadratic in the
+    * length of a whitespace run).
     *
     * The set, one code point each, no ranges: Java's `\s`
     * (`[ \t\n\x0B\f\r]`), then U+0085, U+00A0, U+1680, U+2000, U+2001,
@@ -37,7 +38,7 @@ object Cleaning {
       "\u0085\u00A0\u1680" +
       "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200A" +
       "\u2028\u2029\u202F\u205F\u3000"
-  def wsTrim(c: Column): Column = trim(c, StripChars)
+  def wsTrim(c: Column): Column = btrim(c, lit(StripChars))
 
   // ---------------------------------------------------------------- P2
   /** P2 `clean_utf8` applied to every string-typed column (ref
